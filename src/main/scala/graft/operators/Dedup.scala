@@ -792,11 +792,17 @@ object Dedup {
     * empty without evaluating the guard, even past `maxSources` — the
     * guarded S² fan-out is vacuous with no grams, so there is nothing
     * to refuse; the refusal exists to stop a SHUFFLE, not to validate
-    * the source column in the abstract. */
+    * the source column in the abstract.
+    *
+    * A document with a NULL source belongs to no source: it is left
+    * out before both the distinct-source count and the gram sets, so
+    * it neither pairs nor counts toward `maxSources` (the oracle's
+    * `a.source < b.source` join drops it the same way). */
   def sourceOverlap(spark: SparkSession, dir: String, k: Int = 3,
                     maxSources: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val nSrc = Tables.documents(spark, dir)
+      .filter(col("source").isNotNull)
       .select(col("source")).distinct()
       .agg(count(lit(1)).as("n_sources"))
     // ONE gram-keyed aggregation replaces the r18 distinct + cached
@@ -812,6 +818,7 @@ object Dedup {
     // keep peak row width at S, never S².
     val byGram = ScratchCache.arm( // feeds sizes + the pair explosion
       Tables.documentsFanned(spark, dir) // 3-gram explode: map-heavy (Tables.fanOut)
+        .filter(col("source").isNotNull)
         .select(col("source"), tokens(col("text")).as("toks"))
         .select(col("source"),
           explode(array_distinct(tokenWindows(col("toks"), k, 1))).as("gram"))

@@ -103,7 +103,8 @@ object GmallQueries {
       .withColumn("osum_c", sum(col("amt_c")).over(w))
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("n_rows", count(lit(1)).over(w))
-      .withColumn("prop_c", expr("(total_c * amt_c) div osum_c"))
+      // round(total * amt / osum) half-up, in integer cents
+      .withColumn("prop_c", expr("(2 * total_c * amt_c + osum_c) div (2 * osum_c)"))
       .withColumn("sumprop_c", sum(col("prop_c")).over(w))
       .select(
         col("l_orderkey").as("order_id"),
@@ -998,7 +999,7 @@ object GmallQueries {
         |                            ORDER BY l_linenumber, amt_c, l_partkey) AS rn,
         |         COUNT(*) OVER (PARTITION BY l_orderkey) AS n_rows
         |  FROM j),
-        |p AS (SELECT *, (total_c * amt_c) // osum_c AS prop_c FROM w),
+        |p AS (SELECT *, (2 * total_c * amt_c + osum_c) // (2 * osum_c) AS prop_c FROM w),
         |s AS (SELECT *, SUM(prop_c) OVER (PARTITION BY l_orderkey) AS sumprop_c FROM p)
         |SELECT l_orderkey AS order_id, l_linenumber AS order_detail_id,
         |       CASE WHEN rn = n_rows

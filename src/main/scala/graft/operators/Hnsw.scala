@@ -306,8 +306,6 @@ object Hnsw {
     // (centsFor/booksFor) PLUS the corpus relation's content stamp
     // (round 13): a corpus regenerated under the same path — new
     // session or same — must rebuild, never serve a stale graph
-    // (writeHnswIndex goes through here, so a stale memo wouldn't just
-    // answer wrong, it would PERSIST the stale graph into an index)
     val stamp = corpusStamp(spark, dir)
     graphMemo.keySet.removeIf(k => k._2 == dir && k._5 != stamp)
     graphMemo.computeIfAbsent((spark.sparkContext.applicationId, dir, m, efConstruction, stamp), _ => {
@@ -335,9 +333,21 @@ object Hnsw {
   def annHnsw(spark: SparkSession, dir: String, nQueries: Int = 10,
               k: Int = 5, m: Int = 8, efConstruction: Int = 96,
               efSearch: Int = 64): DataFrame = {
+    import spark.implicits._
     val g = graphFor(spark, dir, m, efConstruction)
     val emb = Tables.embeddings(spark, dir)
-    shortlistRescore(spark, emb, g, nQueries, k, efSearch)
+    val qs = collectQueries(spark, emb, nQueries)
+    val visited = new java.util.BitSet(g.ids.length)
+    // shortlist pairs: (query_id, candidate vec_id); self-matches are
+    // dropped here AND filtered in the rescore (belt and braces)
+    val pairs = qs.flatMap { case (qid, qv) =>
+      search(g, qv, efSearch, visited)
+        .map { case (_, node) => (qid, g.ids(node)) }
+        .filter(_._2 != qid)
+    }
+    val shortlist = spark.createDataset(pairs.toSeq)
+      .toDF("query_id", "vec_id")
+    rescore(emb, shortlist, nQueries, k)
   }
 
   /** Driver-held query set (≤ `nQueries` rows — the model-collect
@@ -350,8 +360,8 @@ object Hnsw {
       .as[(Long, Array[Float])].collect().sortBy(_._1)
   }
 
-  /** The family's exact-rescore tail, shared by every HNSW path
-    * (driver graph, sharded in-session, at-rest fan-out): join the
+  /** The family's exact-rescore tail, shared by the in-session paths
+    * (driver graph, sharded in-session): join the
     * (query_id, vec_id) shortlist back to the corpus, score with the
     * same `cosine` expression and (cos desc, vec_id) window every
     * graft ANN family uses, cut top-k. Precondition: the shortlist
@@ -409,25 +419,6 @@ object Hnsw {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
-  }
-
-  /** Shared by [[annHnsw]] and the at-rest serve path: search the
-    * graph for the first `nQueries` corpus vectors, rescore in Spark. */
-  private def shortlistRescore(spark: SparkSession, emb: DataFrame, g: Graph,
-                               nQueries: Int, k: Int, efSearch: Int): DataFrame = {
-    import spark.implicits._
-    val qs = collectQueries(spark, emb, nQueries)
-    val visited = new java.util.BitSet(g.ids.length)
-    // shortlist pairs: (query_id, candidate vec_id); self-matches are
-    // dropped here AND filtered in the rescore (belt and braces)
-    val pairs = qs.flatMap { case (qid, qv) =>
-      search(g, qv, efSearch, visited)
-        .map { case (_, node) => (qid, g.ids(node)) }
-        .filter(_._2 != qid)
-    }
-    val shortlist = spark.createDataset(pairs.toSeq)
-      .toDF("query_id", "vec_id")
-    rescore(emb, shortlist, nQueries, k)
   }
 
   // ---------------------------------------------------------------
@@ -843,9 +834,8 @@ object Hnsw {
     require(stamps.nonEmpty,
       s"$indexPath/graph has no populated shard= partitions — not a " +
         "populated writeHnswIndexSharded index")
-    // corpus/index drift refuses loudly (the loadGraph contract, made
-    // cheap for the fan-out path): an un-indexed corpus vector is in no
-    // shard graph, so no walk can ever shortlist it, and an indexed id
+    // corpus/index drift refuses loudly: an un-indexed corpus vector is
+    // in no shard graph, so no walk can ever shortlist it, and an indexed id
     // missing from the corpus silently drops from the rescore join.
     // nIndexed == nCorpus plus indexed ⊆ corpus ⇒ the id sets are
     // equal — two id-only aggregates, no wide shuffle. Validated once
@@ -955,12 +945,13 @@ object Hnsw {
   }
 
   /** Incremental maintenance of a [[writeHnswIndexSharded]] index —
-    * the at-scale append: the new corpus vectors (diff-driven, like
-    * [[appendHnswIndex]]; replay appends 0) route to their id-modulo
-    * shards with the pinned `nShards`, and ONLY the affected shards
-    * are read, re-inserted into ([[insertAll]], executor-side inside
-    * the same one-task-per-shard `flatMapGroups` the build uses), and
-    * rewritten — untouched shard partitions are never opened, the
+    * the at-scale append: the new corpus vectors (diff-driven: exactly
+    * the corpus vec_ids the index has never seen, so replay appends 0)
+    * route to their id-modulo shards with the pinned `nShards`, and
+    * ONLY the affected shards are read, re-inserted into
+    * ([[insertAll]], executor-side inside the same one-task-per-shard
+    * `flatMapGroups` the build uses), and rewritten — untouched shard
+    * partitions are never opened, the
     * `appendAnnIndex` touched-cells contract. The rewrite is
     * two-phase through a staging dir (Spark refuses overwriting a
     * path it reads) with dynamic partition overwrite scoped to the
@@ -970,8 +961,8 @@ object Hnsw {
                              indexPath: String): Long = {
     recoverStagedReshard(spark, indexPath)
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    // reverse drift refuses loudly (the loadGraph contract): an indexed
-    // id with no corpus vector cannot be walked through
+    // reverse drift refuses loudly: an indexed id with no corpus
+    // vector means the index was built over a different corpus
     val level0Ids = spark.read.parquet(s"$indexPath/graph")
       .filter(col("level") === 0).select(col("vec_id"))
     val missing = level0Ids.join(emb.select(col("vec_id")), Seq("vec_id"), "left_anti").count()
@@ -1669,218 +1660,9 @@ object Hnsw {
     IdBloom.carryOver(spark, indexPath, stampPre)
   }
 
-  // ---------------------------------------------------------------
-  // At-rest index (the writeAnnIndex deployment split, graph-shaped)
-  // ---------------------------------------------------------------
-
-  /** The graph AT REST: `graph/` holds one row per (node, level) with
-    * its neighbor list — vec_ids, not node indexes, so the relation is
-    * self-contained — plus the entry point; `_meta.json` pins the
-    * build dials (the IndexMeta contract shared with the IVF and
-    * dedup indexes: a serve re-deriving a DIFFERENT graph from
-    * different dials would silently change recall). Vectors are NOT
-    * duplicated into the index — serve loads them from the corpus
-    * relation (the codes-only trade; at 2M×64 floats they are the
-    * same 0.5 GB either way). */
-  def writeHnswIndex(spark: SparkSession, dir: String, out: String,
-                     m: Int = 8, efConstruction: Int = 96): Unit =
-    writeGraphParquet(spark, graphFor(spark, dir, m, efConstruction), out)
-
-  /** Persist one driver-held graph as the [[writeHnswIndex]] layout —
-    * shared by the fresh write and [[appendHnswIndex]]'s rewrite. */
-  private def writeGraphParquet(spark: SparkSession, g: Graph, out: String): Unit = {
-    graft.sources.IndexMeta.write(out, Seq(
-      "family" -> "hnsw", "m" -> g.m, "efConstruction" -> g.efConstruction,
-      "entryId" -> g.ids(g.entry), "maxLevel" -> g.maxLevel))
-    val rows = for {
-      l <- (0 to g.maxLevel).iterator
-      node <- g.layers(l).indices.iterator
-      if g.layers(l)(node).nonEmpty || (l == 0 && g.ids.length == 1)
-    } yield (g.ids(node), l, g.layers(l)(node).map(g.ids(_)).toSeq)
-    import spark.implicits._
-    spark.createDataset(rows.toSeq)
-      .toDF("vec_id", "level", "neighbor_ids")
-      .repartition(1) // a few hundred B/vector — one file reads fastest
-      .write.mode("overwrite").parquet(s"$out/graph")
-  }
-
-  /** Incremental maintenance of a [[writeHnswIndex]] index — the
-    * [[Similarity.appendAnnIndex]] contract for the graph family, and
-    * the operation HNSW exists for in production (online insertion):
-    * bring the index UP TO DATE with a corpus that has grown since the
-    * build. Diff-driven: the new vectors are exactly the corpus
-    * vec_ids the graph has never seen, so replay is idempotent (a
-    * second call appends 0 and writes nothing). Dials (m,
-    * efConstruction) come from the pinned `_meta.json`, never caller
-    * arguments — inserting with different dials than the base graph
-    * is not a mistake this API can express. The insertion itself is
-    * [[insertAll]] — the SAME deterministic loop that built the base —
-    * and the rewrite refreshes entry/maxLevel in `_meta.json` (a new
-    * node can out-level the old entry point). Returns the number of
-    * vectors appended.
-    *
-    * The single-graph layout rewrites the whole `graph/` relation (a
-    * few hundred B/vector — one narrow file); the SHARDED layout's
-    * [[appendHnswIndexSharded]] touches only affected shards, which is
-    * the at-scale path. */
-  def appendHnswIndex(spark: SparkSession, dir: String, indexPath: String): Long = {
-    import graft.sources.IndexMeta.{intField, strField}
-    val meta = graft.sources.IndexMeta.readRaw(indexPath, "writeHnswIndex")
-    require(strField(meta, "family") == "hnsw",
-      s"$indexPath is a '${strField(meta, "family")}' index, not hnsw")
-    val m = intField(meta, "m")
-    val efC = intField(meta, "efConstruction")
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val nVec = emb.count()
-    require(nVec <= driverMaxVectors,
-      s"Hnsw append: corpus has $nVec vectors, driverMaxVectors=$driverMaxVectors")
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val corpusIds = scala.collection.mutable.LongMap.empty[Unit]
-    corpus.foreach { case (id, _) => corpusIds.update(id, ()) }
-    val adjRows = spark.read.parquet(s"$indexPath/graph")
-      .select(col("vec_id"), col("level"), col("neighbor_ids"))
-      .as[(Long, Int, Seq[Long])].collect()
-    val indexed = scala.collection.mutable.LongMap.empty[Unit]
-    adjRows.foreach { case (id, _, ns) =>
-      indexed.update(id, ()); ns.foreach(indexed.update(_, ()))
-    }
-    // reverse drift refuses loudly (the loadGraph contract): an indexed
-    // id with no corpus vector cannot be walked through
-    indexed.foreachKey(id => require(corpusIds.contains(id),
-      s"Hnsw append: indexed vec_id=$id is not in the corpus at $dir — " +
-        s"the index at $indexPath was built over a different corpus; " +
-        "rebuild it (writeHnswIndex) or append against the right dir"))
-    val (oldRows, newRows) = corpus.partition(r => indexed.contains(r._1))
-    if (newRows.isEmpty) return 0L
-    // assemble the base graph over the INDEXED subset of the corpus
-    val ids = oldRows.map(_._1)
-    val idx = scala.collection.mutable.LongMap.empty[Int]
-    ids.indices.foreach(i => idx.update(ids(i), i))
-    val maxLevel = intField(meta, "maxLevel")
-    val entryId = {
-      val mt = "\"entryId\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(meta)
-      require(mt.isDefined, s"_meta.json missing entryId: $meta")
-      mt.get.group(1).toLong
-    }
-    val layers = Array.fill(maxLevel + 1, ids.length)(Array.empty[Int])
-    adjRows.foreach { case (id, l, ns) =>
-      layers(l)(idx(id)) = ns.map(idx(_)).toArray
-    }
-    val base = new Graph(ids, oldRows.map(_._2), layers, idx(entryId),
-      maxLevel, m, efC)
-    val grown = insertAll(base, newRows.map(_._1), newRows.map(_._2))
-    writeGraphParquet(spark, grown, indexPath)
-    // the serve memo may hold the PRE-append graph for this index path
-    // (any dir/session): drop those entries so the next serve reloads
-    servedMemo.keySet.removeIf(_._3 == indexPath)
-    newRows.length.toLong
-  }
-
-  /** Serve memo: at-rest graphs reloaded once per (indexPath, content
-    * stamp) — the annIvfPqServeQueries model-memo idea for the graph
-    * family, stamp-keyed like [[ShardGraphCache]] (round 13): an index
-    * REWRITTEN at the same path, or a corpus dir regenerated under the
-    * same name, changes the stamp and re-keys structurally, so a stale
-    * graph can't be looked up; stale-stamp entries for the same
-    * (dir, indexPath) are purged at the next load, keeping the map one
-    * live entry per served index. */
-  private val servedMemo = new java.util.concurrent.ConcurrentHashMap[(String, String, String, String), Graph]()
-  private[graft] def invalidateServedMemo(): Unit = servedMemo.clear()
-
-  /** Content stamp of a single-graph index's `graph/` relation plus
-    * the corpus relation's own file listing (the memoized graph holds
-    * corpus VECTORS, so a regenerated corpus must re-key too). Empty
-    * when `graph/` is absent — the memo body's meta read produces the
-    * loud, named refusal. */
-  private def servedStamp(spark: SparkSession, dir: String,
-                          indexPath: String): String =
-    fileListingStamp(spark, s"$indexPath/graph") + "||" + corpusStamp(spark, dir)
-
   /** Content stamp of the corpus relation — keys [[graphFor]]'s build
-    * memo (and half of [[servedStamp]]): a regenerated corpus under
-    * the same path must rebuild. */
+    * memo and [[annHnswServeSharded]]'s drift check: a regenerated
+    * corpus under the same path must rebuild and re-validate. */
   private def corpusStamp(spark: SparkSession, dir: String): String =
     graft.sources.ContentStamp.ofCorpus(spark, dir)
-
-  private def fileListingStamp(spark: SparkSession, pathStr: String): String =
-    graft.sources.ContentStamp.of(spark, pathStr)
-
-  /** Load a [[writeHnswIndex]] graph: dials and entry from `_meta.json`
-    * (REQUIRED — the self-description contract), adjacency from
-    * `graph/`, vectors from the CORPUS relation (which must contain
-    * EXACTLY the indexed vec_ids — checked loudly below, because both
-    * drift directions are silent recall loss: an indexed id missing
-    * from the corpus has no vector to walk through, and a corpus
-    * vector missing from the graph has no in-edges, so no walk can
-    * ever shortlist it). */
-  private def loadGraph(spark: SparkSession, dir: String, indexPath: String): Graph = {
-    // keyed by (applicationId, dir, indexPath, content stamp) — the
-    // graph's VECTORS come from `dir`, so the same index served
-    // against a different corpus relation must reload, and a rewrite
-    // of either relation under the SAME names re-keys structurally
-    // (never reuse shortlists walked over the wrong vectors/graph)
-    val stamp = servedStamp(spark, dir, indexPath)
-    servedMemo.keySet.removeIf(k =>
-      k._2 == dir && k._3 == indexPath && k._4 != stamp)
-    servedMemo.computeIfAbsent((spark.sparkContext.applicationId, dir, indexPath, stamp), _ => {
-      import graft.sources.IndexMeta.{intField, strField}
-      val meta = graft.sources.IndexMeta.readRaw(indexPath, "writeHnswIndex")
-      require(strField(meta, "family") == "hnsw",
-        s"$indexPath is a '${strField(meta, "family")}' index, not hnsw")
-      val m = intField(meta, "m")
-      val efC = intField(meta, "efConstruction")
-      val maxLevel = intField(meta, "maxLevel")
-      // entryId is a vec_id — parse as Long (intField would overflow on
-      // a 64-bit id space)
-      val entryId = {
-        val mt = "\"entryId\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(meta)
-        require(mt.isDefined, s"_meta.json missing entryId: $meta")
-        mt.get.group(1).toLong
-      }
-      import spark.implicits._
-      val emb = Tables.embeddings(spark, dir)
-      val nVec = emb.count()
-      require(nVec <= driverMaxVectors,
-        s"Hnsw serve: corpus has $nVec vectors, driverMaxVectors=$driverMaxVectors")
-      val rows = emb.select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val ids = rows.map(_._1)
-      val idx = ids.zipWithIndex.toMap
-      // loud on BOTH drift directions (refuse-loudly house style):
-      def resolve(id: Long, what: String): Int = idx.getOrElse(id,
-        throw new IllegalArgumentException(
-          s"Hnsw serve: indexed $what vec_id=$id is not in the corpus at " +
-            s"$dir — the index at $indexPath was built over a different " +
-            "corpus; rebuild it (writeHnswIndex) or serve the right dir"))
-      val layers = Array.fill(maxLevel + 1, ids.length)(Array.empty[Int])
-      val graphIds = scala.collection.mutable.LongMap.empty[Unit]
-      spark.read.parquet(s"$indexPath/graph")
-        .select(col("vec_id"), col("level"), col("neighbor_ids"))
-        .as[(Long, Int, Seq[Long])].collect()
-        .foreach { case (id, l, ns) =>
-          graphIds.update(id, ())
-          layers(l)(resolve(id, "graph-node")) =
-            ns.map(resolve(_, "neighbor")).toArray
-        }
-      val orphans = ids.count(!graphIds.contains(_))
-      require(orphans == 0,
-        s"Hnsw serve: corpus at $dir has $orphans vectors the index at " +
-          s"$indexPath never saw — un-indexed vectors have no in-edges, " +
-          "so no graph walk can ever reach them (silent recall loss); " +
-          "appendHnswIndex the new vectors or rebuild")
-      new Graph(ids, rows.map(_._2), layers, resolve(entryId, "entry"), maxLevel, m, efC)
-    })
-  }
-
-  /** Serve v18 from the at-rest graph — same shortlist + exact Spark
-    * rescore as the in-session operator, so serve == in-session at
-    * equal dials (HnswSpec pins it). */
-  def annHnswServe(spark: SparkSession, dir: String, indexPath: String,
-                   nQueries: Int = 10, k: Int = 5,
-                   efSearch: Int = 64): DataFrame = {
-    val g = loadGraph(spark, dir, indexPath)
-    shortlistRescore(spark, Tables.embeddings(spark, dir), g, nQueries, k, efSearch)
-  }
 }

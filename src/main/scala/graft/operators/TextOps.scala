@@ -40,8 +40,7 @@ object TextOps {
 
   /** [[quality]] over ANY (doc_id, text) relation — the per-batch form
     * the streaming intake scores each arriving micro-batch with. */
-  def qualityOn(docs: DataFrame): DataFrame = {
-    val stop = Seq("a", "the")
+  def qualityOn(docs: DataFrame): DataFrame =
     docs
       .withColumn("toks", tokens("text"))
       .select(
@@ -49,9 +48,14 @@ object TextOps {
         length(col("text")).as("n_chars"),
         size(col("toks")).as("n_tokens"),
         size(array_distinct(col("toks"))).as("n_distinct_tokens"),
-        (size(filter(col("toks"), t => t.isin(stop.map(lit(_)): _*)))
-          / size(col("toks")).cast("double")).as("stopword_ratio"))
-  }
+        stopwordRatio(col("toks")).as("stopword_ratio"))
+
+  /** Share of a token array's tokens in the (tiny, built-in) stopword
+    * set — ONE definition behind t1's `stopword_ratio` feature and the
+    * t10 verdict's `stopword_heavy` rule, so the two cannot drift. */
+  private def stopwordRatio(toks: Column): Column =
+    size(filter(toks, t => t.isin(lit("a"), lit("the")))) /
+      size(toks).cast("double")
 
   /** Token counting with a BPE-ish regex (word pieces + standalone
     * punctuation), the classic pre-tokenizer approximation. */
@@ -235,7 +239,6 @@ object TextOps {
     * the decision stage becomes a map-only scan (guide §1.2: remove
     * shuffles the computation never needed). */
   def filterDecisionOn(docs: DataFrame): DataFrame = {
-    val stop = Seq("a", "the")
     // fold over the sorted array: (previous token, current run length,
     // best run length); equal neighbors extend the run, others reset it
     def maxRun(sortedToks: Column): Column = aggregate(
@@ -252,11 +255,13 @@ object TextOps {
     docs
       .withColumn("toks", tokens("text"))
       .select(col("doc_id"),
-        size(col("toks")).as("n_tokens"),
+        // null text has no token array and size(NULL) is NULL, which
+        // no rule would fire on: count it as 0 tokens, so it drops as
+        // too_short instead of passing as keep
+        coalesce(size(col("toks")), lit(0)).as("n_tokens"),
         (maxRun(array_sort(col("toks")))
           / size(col("toks")).cast("double")).as("max_tok_frac"),
-        (size(filter(col("toks"), t => t.isin(stop.map(lit(_)): _*)))
-          / size(col("toks")).cast("double")).as("stopword_ratio"))
+        stopwordRatio(col("toks")).as("stopword_ratio"))
       .select(col("doc_id"), col("n_tokens"), col("max_tok_frac"),
         col("stopword_ratio"),
         when(col("n_tokens") < 15, "too_short")

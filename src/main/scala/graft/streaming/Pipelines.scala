@@ -192,7 +192,8 @@ object Pipelines {
         // malformed order (original total 0) must not poison-pill the
         // query — a task throw would crash-loop on checkpoint replay
         else if (originalC == 0L) 0L
-        else (finalC * detailC) / originalC // Long math: exact integral div
+        // round(final * detail / original) half-up, in exact Long math
+        else (2 * finalC * detailC + originalC) / (2 * originalC)
       st = ApportionState(st.originSumC + detailC, st.splitSumC + shareC)
       OrderWideSplit(r.order_detail_id, r.order_id, r.sku_id, r.sku_num,
         r.sku_price, r.final_total_amount, r.original_total_amount,

@@ -5,9 +5,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** HNSW graph-ANN family (v18): gate equality vs the exact sweep under
-  * a generous dial, construction determinism, the driver bound's loud
-  * refusal, and serve-from-index == in-session. */
+/** HNSW graph-ANN family (v18/v19): gate equality vs the exact sweep
+  * under a generous dial, construction determinism, the driver bound's
+  * loud refusal, and serve-from-index == in-session. The one at-rest
+  * format is the sharded layout; a one-shard index is the whole corpus
+  * in one graph. */
 class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
@@ -63,49 +65,51 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("serve from the at-rest index == in-session at equal dials") {
+    // a one-shard index holds the same graph the driver operator builds
+    // (same deterministic build over the same ascending ids), so the
+    // served rows equal v18's in-session rows
     val idx = java.nio.file.Files.createTempDirectory("hnsw-idx").toString
-    Hnsw.writeHnswIndex(spark, sf, idx)
-    Hnsw.invalidateServedMemo()
-    val served = rows(Hnsw.annHnswServe(spark, sf, idx, efSearch = 256))
+    Hnsw.writeHnswIndexSharded(spark, sf, idx, nShards = 1)
+    val served = rows(Hnsw.annHnswServeSharded(spark, sf, idx, efSearch = 256))
     val inSession = rows(Hnsw.annHnsw(spark, sf, efSearch = 256))
     assert(served == inSession)
   }
 
   test("serve refuses a directory without _meta.json") {
-    Hnsw.invalidateServedMemo()
     val bare = java.nio.file.Files.createTempDirectory("hnsw-bare").toString
     val e = intercept[IllegalArgumentException] {
-      Hnsw.annHnswServe(spark, sf, bare).collect()
+      Hnsw.annHnswServeSharded(spark, sf, bare).collect()
     }
     assert(e.getMessage.contains("_meta.json"))
-    assert(e.getMessage.contains("writeHnswIndex"))
+    assert(e.getMessage.contains("writeHnswIndexSharded"))
   }
 
   test("serve refuses an index of a different family") {
-    Hnsw.invalidateServedMemo()
     val idx = java.nio.file.Files.createTempDirectory("hnsw-wrongfam").toString
     Similarity.writeAnnIndex(spark, sf, idx) // a pq-family IVF index
     val e = intercept[IllegalArgumentException] {
-      Hnsw.annHnswServe(spark, sf, idx).collect()
+      Hnsw.annHnswServeSharded(spark, sf, idx).collect()
     }
-    assert(e.getMessage.contains("hnsw"))
+    assert(e.getMessage.contains("not hnsw_sharded"), e.getMessage)
   }
 
   test("sharded: in-session == brute force at the gate dial, and == the " +
       "single-graph serve on a 2-shard split") {
     // the fan-out/merge contract: each shard's walk finds its own
     // members of the global top-k, the union shortlist contains the
-    // true top-k, and the exact rescore makes the outputs identical
+    // true top-k, and the exact rescore makes the outputs identical —
+    // so a 2-shard serve equals the single-graph (one-shard) serve
     val exact = rows(Similarity.annBruteForce(spark, sf))
     assert(rows(Hnsw.annHnswSharded(spark, sf, efSearch = 32)) == exact)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-shidx").toString
     Hnsw.writeHnswIndexSharded(spark, sf, idx, nShards = 2)
     val sharded2 = rows(Hnsw.annHnswServeSharded(spark, sf, idx, efSearch = 256))
-    Hnsw.invalidateServedMemo()
     val single = java.nio.file.Files.createTempDirectory("hnsw-sgidx").toString
-    Hnsw.writeHnswIndex(spark, sf, single)
-    assert(sharded2 == rows(Hnsw.annHnswServe(spark, sf, single, efSearch = 256)),
-      "2-shard fan-out serve must equal the single-graph serve")
+    Hnsw.writeHnswIndexSharded(spark, sf, single, nShards = 1)
+    val sharded1 = rows(Hnsw.annHnswServeSharded(spark, sf, single, efSearch = 256))
+    assert(sharded2 == sharded1,
+      "2-shard fan-out serve must equal the one-shard serve")
+    assert(sharded1 == exact, "one-shard serve at ef=256 must equal brute force")
   }
 
   test("sharded: at-rest serve == in-session sharded at equal dials, " +
@@ -131,16 +135,14 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(files.length == 1,
         s"shard=$s should be ONE file (one build task per shard), got ${files.length}")
     }
-    val e1 = intercept[IllegalArgumentException] {
-      Hnsw.annHnswServe(spark, sf, idx).collect() // single-graph serve on sharded idx
+    // an IVF serve refuses the graph index (its _meta.json carries no
+    // IVF model dials); the HNSW serve refusing an IVF index is the
+    // different-family test above
+    val e = intercept[IllegalArgumentException] {
+      Similarity.annIvfPqServe(spark, sf, idx).collect()
     }
-    assert(e1.getMessage.contains("hnsw_sharded"))
-    val single = java.nio.file.Files.createTempDirectory("hnsw-sg2").toString
-    Hnsw.writeHnswIndex(spark, sf, single)
-    val e2 = intercept[IllegalArgumentException] {
-      Hnsw.annHnswServeSharded(spark, sf, single).collect()
-    }
-    assert(e2.getMessage.contains("not hnsw_sharded"))
+    assert(e.getMessage.contains("missing nClusters") &&
+      e.getMessage.contains("hnsw_sharded"), e.getMessage)
   }
 
   test("sharded serve: repeat call serves from executor-resident shard " +
@@ -215,35 +217,27 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val served = rows(Hnsw.annHnswServeSharded(spark, sf, idx, efSearch = 256))
     assert(served == rows(Similarity.annBruteForce(spark, sf)),
       "serve after an in-place rewrite must reflect the new index")
-  }
-
-  test("single-graph serve is never stale: an index rewritten at the " +
-      "same path AND a corpus regenerated under the same dir both re-key") {
+    // regenerate BOTH under the same names: a corpus of 100 vectors
+    // shrinks to 80 and the index is rebuilt over it in place. A
+    // path-keyed residency or drift memo would serve the old graph
+    // (ids 80-99 in the top-k = silently wrong); content stamps re-key
     import org.apache.spark.sql.functions.col
-    // corpus A (100 vectors) at dir D, index at P, serve → memo holds
-    // the 100-vector graph keyed by (D, P, stamp)
     val dir = forgeCorpus(col("vec_id") < 100)
-    val idx = java.nio.file.Files.createTempDirectory("hnsw-stale").toString
-    Hnsw.writeHnswIndex(spark, dir, idx)
-    assert(rows(Hnsw.annHnswServe(spark, dir, idx, efSearch = 256)) ==
+    Hnsw.writeHnswIndexSharded(spark, dir, idx, nShards = 2)
+    assert(rows(Hnsw.annHnswServeSharded(spark, dir, idx, efSearch = 256)) ==
       rows(Similarity.annBruteForce(spark, dir)))
-    // regenerate BOTH under the same names: corpus shrinks to 80,
-    // index rebuilt over it in place. A path-keyed memo would serve
-    // the old 100-vector graph (ids 80-99 in the top-k = silently
-    // wrong); the content stamp re-keys and reloads
     graft.Tables.embeddings(spark, sf).filter(col("vec_id") < 80)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Hnsw.writeHnswIndex(spark, dir, idx)
-    assert(rows(Hnsw.annHnswServe(spark, dir, idx, efSearch = 256)) ==
+    Hnsw.writeHnswIndexSharded(spark, dir, idx, nShards = 2)
+    assert(rows(Hnsw.annHnswServeSharded(spark, dir, idx, efSearch = 256)) ==
       rows(Similarity.annBruteForce(spark, dir)),
       "serve after an in-place corpus+index rewrite must reflect the new state")
   }
 
   test("serve refuses corpus/index drift in BOTH directions, loudly") {
-    // the graph stores vec_ids; vectors come from the corpus relation.
-    // Drift either way is silent recall loss (an indexed id with no
-    // vector, or a corpus vector no walk can reach) — so loadGraph
-    // must refuse with a message naming the mismatch, not NPE or serve
+    // Drift either way is silent recall loss (an indexed id the corpus
+    // no longer holds, or a corpus vector no walk can reach) — so the
+    // serve must refuse with a message naming the mismatch
     import org.apache.spark.sql.functions.col
     def forge(n: Int, from: Int = 0): String = {
       val d = java.nio.file.Files.createTempDirectory("hnsw-corpus").toString
@@ -254,29 +248,27 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val base = forge(100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-drift").toString
-    Hnsw.writeHnswIndex(spark, base, idx)
+    Hnsw.writeHnswIndexSharded(spark, base, idx, nShards = 2)
+    Hnsw.invalidateDriftChecks()
     // corpus GREW past the index: un-indexed vectors are unreachable
-    Hnsw.invalidateServedMemo()
     val grown = forge(120)
     val e1 = intercept[IllegalArgumentException] {
-      Hnsw.annHnswServe(spark, grown, idx).collect()
+      Hnsw.annHnswServeSharded(spark, grown, idx).collect()
     }
     assert(e1.getMessage.contains("never saw") &&
-      e1.getMessage.contains("appendHnswIndex"), e1.getMessage)
-    // corpus MISSING indexed ids: a graph node has no vector to walk
-    Hnsw.invalidateServedMemo()
+      e1.getMessage.contains("appendHnswIndexSharded"), e1.getMessage)
+    // corpus MISSING indexed ids: the index was built over another corpus
     val shifted = forge(100, from = 50)
     val e2 = intercept[IllegalArgumentException] {
-      Hnsw.annHnswServe(spark, shifted, idx).collect()
+      Hnsw.annHnswServeSharded(spark, shifted, idx).collect()
     }
     assert(e2.getMessage.contains("not in the corpus"), e2.getMessage)
-    // and the memo keys on the corpus dir: a correct serve against
-    // `base` right after the failed ones must reload, not reuse
-    Hnsw.invalidateServedMemo()
-    assert(Hnsw.annHnswServe(spark, base, idx, nQueries = 3, k = 2)
+    // and the drift check keys on the corpus dir: a passing serve
+    // against `base` must not let the wrong dir through afterwards
+    assert(Hnsw.annHnswServeSharded(spark, base, idx, nQueries = 3, k = 2)
       .count() > 0)
     intercept[IllegalArgumentException] { // same index, wrong dir again
-      Hnsw.annHnswServe(spark, grown, idx).collect()
+      Hnsw.annHnswServeSharded(spark, grown, idx).collect()
     }
   }
 
@@ -287,43 +279,14 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
-  test("append: a grown corpus serves after appendHnswIndex — no " +
-      "rebuild, memo auto-invalidated, replay idempotent") {
-    import org.apache.spark.sql.functions.col
-    val base = forgeCorpus(col("vec_id") < 100)
-    val idx = java.nio.file.Files.createTempDirectory("hnsw-append").toString
-    Hnsw.writeHnswIndex(spark, base, idx)
-    Hnsw.invalidateServedMemo()
-    // pre-populate the serve memo with the PRE-append graph
-    assert(Hnsw.annHnswServe(spark, base, idx, nQueries = 3, k = 2).count() > 0)
-    val grown = forgeCorpus(col("vec_id") < 130)
-    intercept[IllegalArgumentException] { // grown corpus refuses pre-append
-      Hnsw.annHnswServe(spark, grown, idx).collect()
-    }
-    assert(Hnsw.appendHnswIndex(spark, grown, idx) == 30L)
-    // ef ≥ n ⇒ exhaustive: the appended graph must serve the grown
-    // corpus exactly (insertion order differs from a fresh build, but
-    // the exhaustive shortlist + exact rescore erase that)
-    val served = rows(Hnsw.annHnswServe(spark, grown, idx, efSearch = 256))
-    assert(served == rows(Similarity.annBruteForce(spark, grown)))
-    // the append dropped this index's memo entries itself: serving the
-    // OLD corpus now refuses (the index has ids base never had) with
-    // no manual invalidation in between
-    intercept[IllegalArgumentException] {
-      Hnsw.annHnswServe(spark, base, idx).collect()
-    }
-    assert(Hnsw.appendHnswIndex(spark, grown, idx) == 0L, "replay must no-op")
-    assert(rows(Hnsw.annHnswServe(spark, grown, idx, efSearch = 256)) == served)
-  }
-
   test("append refuses an index whose vectors the corpus lost") {
     import org.apache.spark.sql.functions.col
     val base = forgeCorpus(col("vec_id") < 100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-append-bad").toString
-    Hnsw.writeHnswIndex(spark, base, idx)
+    Hnsw.writeHnswIndexSharded(spark, base, idx, nShards = 4)
     val shifted = forgeCorpus(col("vec_id") >= 50 && col("vec_id") < 150)
     val e = intercept[IllegalArgumentException] {
-      Hnsw.appendHnswIndex(spark, shifted, idx)
+      Hnsw.appendHnswIndexSharded(spark, shifted, idx)
     }
     assert(e.getMessage.contains("not in the corpus"), e.getMessage)
   }
@@ -353,6 +316,12 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val served = rows(Hnsw.annHnswServeSharded(spark, grown, idx, efSearch = 256))
     assert(served == rows(Similarity.annBruteForce(spark, grown)),
       "exhaustive ef after append must equal brute force on the grown corpus")
+    // the append re-stamped the index: serving the OLD corpus now
+    // refuses (the index has ids base never had) with no manual
+    // invalidation in between
+    intercept[IllegalArgumentException] {
+      Hnsw.annHnswServeSharded(spark, base, idx).collect()
+    }
     assert(Hnsw.appendHnswIndexSharded(spark, grown, idx) == 0L, "replay must no-op")
     assert(rows(Hnsw.annHnswServeSharded(spark, grown, idx, efSearch = 256)) == served)
   }

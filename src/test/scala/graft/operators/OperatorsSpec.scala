@@ -554,6 +554,17 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("filter_decision (t10): null, empty and whitespace text drop as too_short") {
+    import spark.implicits._
+    val docs = Seq((1L, null: String), (2L, ""), (3L, "   ")).toDF("doc_id", "text")
+    val got = TextOps.filterDecisionOn(docs)
+      .select("doc_id", "n_tokens", "drop_reason", "keep").as[(Long, Int, String, Boolean)]
+      .collect().sortBy(_._1).toSeq
+    assert(got.map(r => (r._1, r._3, r._4)) ===
+      Seq((1L, "too_short", false), (2L, "too_short", false), (3L, "too_short", false)))
+    assert(got.head._2 === 0, "null text counts as 0 tokens")
+  }
+
   test("decontaminate: eval docs excluded, flags match gram overlap, full train coverage") {
     import spark.implicits._
     val out = TextOps.decontaminate(spark, sf).as[(Long, Long, Boolean)].collect()
@@ -1259,6 +1270,24 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the refusal must name the 100 TB path")
     // and the default cap admits the real corpus unchanged
     assert(Dedup.sourceOverlap(spark, sf).count() > 0)
+    // a NULL source is no source: it neither pairs nor counts toward
+    // the cap — a cap of exactly the real source count admits a corpus
+    // with null-source docs, and the output equals that corpus with
+    // those docs removed
+    def forge(docs: org.apache.spark.sql.DataFrame): String = {
+      val d = java.nio.file.Files.createTempDirectory("graft-d13-null").toString
+      docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
+      d
+    }
+    val docs = Tables.documents(spark, sf)
+    val nulled = col("doc_id") % 7 === 0
+    val withNull = forge(docs.withColumn("source",
+      when(nulled, lit(null).cast("string")).otherwise(col("source"))))
+    val without = forge(docs.filter(!nulled))
+    val nReal = docs.filter(!nulled).select("source").distinct().count().toInt
+    def rowsOf(dir: String) =
+      Dedup.sourceOverlap(spark, dir, maxSources = nReal).collect().map(_.toSeq).toSet
+    assert(rowsOf(withNull) === rowsOf(without))
   }
 
   test("sourceOverlapMinhash: union sketch merges associatively; estimate tracks exact Jaccard") {

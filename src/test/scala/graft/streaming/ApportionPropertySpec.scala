@@ -45,14 +45,15 @@ object ApportionPropertySpec extends Properties("apportion") {
       (out.size == cents.size) && (sumC == finalC)
     }
 
-  property("non-remainder shares are floor-proportional") =
+  property("non-remainder shares are the proportional share rounded half-up") =
     Prop.forAll(orderGen) { case (cents, finalC) =>
       val out = run(cents, finalC, List(cents.indices.toList))
       val originalC = cents.sum
       val shares = out.sortBy(_.order_detail_id)
         .map(s => Math.round(s.final_detail_amount * 100))
       shares.zip(cents).init.forall { case (share, c) =>
-        share == (finalC * c) / originalC
+        share == (BigDecimal(finalC) * c / originalC)
+          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
       }
     }
 }

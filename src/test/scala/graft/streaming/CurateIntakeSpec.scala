@@ -74,11 +74,13 @@ class CurateIntakeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     // batch 2: a clone of a b1 ACCEPTEE (must drop as cross-batch
-    // duplicate) and a guaranteed-too_short synthetic doc
+    // duplicate), a guaranteed-too_short synthetic doc, and a doc with
+    // NULL text (no tokens: must drop as too_short, never pass)
     val b1AcceptedExpected = corpusB1.filter(id => expected(id)._1)
     assert(b1AcceptedExpected.nonEmpty, "need at least one accepted b1 doc")
     val cloneSrc = b1AcceptedExpected.head
-    val b2 = Seq((900000L, docsText(cloneSrc)), (900001L, "tiny doc"))
+    val b2 = Seq((900000L, docsText(cloneSrc)), (900001L, "tiny doc"),
+      (900002L, null: String))
 
     val idx = tmp("graft-ci-idx")
     val out = tmp("graft-ci-out")
@@ -117,6 +119,7 @@ class CurateIntakeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dec(900000L) === ((false, "duplicate", cloneSrc)),
       s"cross-batch clone verdict: ${dec(900000L)}")
     assert(dec(900001L) === ((false, "too_short", -1L)))
+    assert(dec(900002L) === ((false, "too_short", -1L)))
 
     // index holds exactly the accepted ids
     val indexed = spark.read.parquet(s"$idx/shingles")

