@@ -705,7 +705,7 @@ object Bench {
       }
     }
     // the full LAYERED topology as three concurrent chained streaming
-    // queries (router → join+apportion → trademark agg over file
+    // queries (router → fused join+apportion → trademark agg over file
     // edges — streaming/Topology.scala): end-to-end chain throughput
     // over the CDC input lines, wall-clock from first stage start to
     // final stage drained (startup + commit-log handshakes included —

@@ -39,7 +39,10 @@ object Dedup {
     * paths, so their bucket values cannot drift. */
   private[graft] def withShingleHashes(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("toks", tokens(col(textCol)))
-      .withColumn("shingles", array_distinct(tokenWindows(col("toks"), 3, 1)))
+      // null text windows to one null shingle: compact it away so the
+      // document has no shingles (xxhash64(null) would be a shared 42)
+      .withColumn("shingles",
+        array_distinct(array_compact(tokenWindows(col("toks"), 3, 1))))
       .withColumn("sh_hashes",
         sort_array(array_distinct(transform(col("shingles"), s => xxhash64(s)))))
       .drop("toks", "shingles")
@@ -200,7 +203,9 @@ object Dedup {
     // codegen loop (functions.MinHashSigs).
     val docs = ScratchCache.arm( // feeds the banded index and both verify joins (see d2)
       withShingleHashes(documents, "text")
-        .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh")))
+        .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
+        // a shingle-less document shares nothing: its Jaccard is 0/0
+        .filter(col("n_sh") > 0))
     // persist the banded index (plain (doc, band, bucket) rows): it sits
     // on both sides of the bucket self-join, which would otherwise run
     // the minhash projection twice (~2× at sf0.1).
@@ -1109,7 +1114,9 @@ object Dedup {
       .select(col("shard")).distinct().collect().map(_.getInt(0))
     val q = ScratchCache.arm( // feeds probes AND the verify join
       withShingleHashes(batch, "text")
-        .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh")))
+        .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
+        // a shingle-less probe shares nothing: its Jaccard is 0/0
+        .filter(col("n_sh") > 0))
     val probes = bandedOf(q, numHashes, bands, shards)
       .select(col("doc_id").as("query_id"), col("band"), col("bucket"))
     val idx = spark.read.parquet(s"$indexPath/buckets")

@@ -546,11 +546,17 @@ object Similarity {
   }
 
   /** (family, nClusters, iters, m, nCodes) from the index's
-    * `_meta.json`; loud on a meta-less directory. */
+    * `_meta.json`; loud on a meta-less directory and on an index whose
+    * family is not one of the IVF [[indexFamilies]] (a graph index's
+    * meta must never be read as IVF dials). */
   private[graft] def readAnnMeta(indexPath: String): (String, Int, Int, Int, Int) = {
     import graft.sources.IndexMeta.{intField, strField}
     val s = graft.sources.IndexMeta.readRaw(indexPath, "writeAnnIndex")
-    (strField(s, "family"), intField(s, "nClusters"), intField(s, "iters"),
+    val family = strField(s, "family")
+    require(indexFamilies.contains(family),
+      s"$indexPath is a '$family' index, not an IVF index (expected one of " +
+        s"${indexFamilies.keys.toSeq.sorted.mkString(", ")})")
+    (family, intField(s, "nClusters"), intField(s, "iters"),
       intField(s, "m"), intField(s, "nCodes"))
   }
 

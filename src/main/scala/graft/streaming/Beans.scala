@@ -47,10 +47,19 @@ final case class OrderWideSplit(
     create_time: Timestamp,
     final_detail_amount: Double)
 
-/** Keyed state for the apportionment operator: running sums in cents
-  * (`dws/OrderWideApp.scala:136-178`'s two Redis keys, moved into the
-  * Spark state store). */
+/** An order's running apportion sums in cents
+  * (`dws/OrderWideApp.scala:136-178`'s two Redis keys). */
 final case class ApportionState(originSumC: Long, splitSumC: Long)
+
+/** One header or detail event of an order — exactly one of the two is
+  * set — as the fused order-wide operator reads them. */
+final case class OrderEvent(order_id: Long, event_time: Timestamp,
+    header: Option[OrderInfo], detail: Option[OrderDetail])
+
+/** Keyed state of the fused order-wide operator: the order's header
+  * once seen, the details waiting for it, and the apportion sums. */
+final case class OrderWideState(header: Option[OrderInfo],
+    pending: Seq[OrderDetail], sums: ApportionState)
 
 /** App-start log for the DAU pipeline (FIXTURES.md §1.1). */
 final case class StartLog(mid: String, uid: String, ar: String, ch: String,

@@ -146,14 +146,14 @@ object Runner {
   }
 
   /** DWS order-wide on file edges: one CDC JSON-lines dir in → router →
-    * typed parse → watermarked stream-stream join → stateful
-    * apportionment → parquet out (≙ OrderWideApp end-to-end; the
-    * ClickHouse/Kafka sinks are this `writeStream` with a different
-    * format string). */
+    * typed parse → the fused order-wide join + apportionment
+    * ([[Pipelines.orderWide]]) → parquet out (≙ OrderWideApp
+    * end-to-end; the ClickHouse/Kafka sinks are this `writeStream` with
+    * a different format string). */
   def orderWideQuery(spark: SparkSession, cdcDir: String, outDir: String,
                      checkpoint: String): StreamingQuery = {
     val (oi, od) = parseOrderStreams(spark, cdcDir)
-    Pipelines.apportion(Pipelines.orderWideJoin(oi, od))
+    Pipelines.orderWide(oi, od)
       .writeStream
       .outputMode("append")
       .format("parquet")
@@ -173,7 +173,7 @@ object Runner {
   def orderWideMultiSinkQuery(spark: SparkSession, cdcDir: String, detailDir: String,
                               aggDir: String, checkpoint: String): StreamingQuery = {
     val (oi, od) = parseOrderStreams(spark, cdcDir)
-    Pipelines.apportion(Pipelines.orderWideJoin(oi, od))
+    Pipelines.orderWide(oi, od)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

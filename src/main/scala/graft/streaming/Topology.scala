@@ -20,9 +20,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Three concurrent streaming queries in one session:
   *   1. router: CDC JSON lines → (topic, value) parquet, partitioned
   *      by topic ([[Pipelines.routeCdc]]);
-  *   2. wide: routed stream → typed order header/detail parse →
-  *      watermarked interval join → stateful apportionment
-  *      ([[Pipelines.orderWideJoin]] + [[Pipelines.apportion]]);
+  *   2. wide: routed stream → typed order header/detail parse → one
+  *      stateful operator keyed by order id that pairs each detail with
+  *      its header inside the skew window and apportions it
+  *      ([[Pipelines.orderWide]]: one shuffle, one state store per
+  *      partition, state only for orders still in flight);
   *   3. agg: order-wide stream → per-batch-refreshed sku dim join →
   *      trademark revenue in integer cents, landed per batch_id with
   *      dynamic partition overwrite (the K5 idempotent-sink recipe).
@@ -122,10 +124,8 @@ object Topology {
     val od = routed.filter(col("topic") === "ods_order_detail")
       .select(from_json(col("value"), Runner.orderDetailSchema).as("o"))
       .select("o.*").as[OrderDetail]
-    // state TTL off: the drive/bench drains must settle (a
-    // ProcessingTimeTimeout schedules timeout-only batches forever)
     val wide = paced(
-      Pipelines.apportion(Pipelines.orderWideJoin(oi, od), stateTtlMs = 0)
+      Pipelines.orderWide(oi, od)
         .writeStream.outputMode("append").format("parquet")
         .option("path", wideDir)
         .option("checkpointLocation", s"$ckptRoot/wide"))

@@ -135,14 +135,14 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(files.length == 1,
         s"shard=$s should be ONE file (one build task per shard), got ${files.length}")
     }
-    // an IVF serve refuses the graph index (its _meta.json carries no
-    // IVF model dials); the HNSW serve refusing an IVF index is the
-    // different-family test above
+    // an IVF serve refuses the graph index by its family, naming it;
+    // the HNSW serve refusing an IVF index is the different-family
+    // test above
     val e = intercept[IllegalArgumentException] {
       Similarity.annIvfPqServe(spark, sf, idx).collect()
     }
-    assert(e.getMessage.contains("missing nClusters") &&
-      e.getMessage.contains("hnsw_sharded"), e.getMessage)
+    assert(e.getMessage.contains("'hnsw_sharded' index, not an IVF index"),
+      e.getMessage)
   }
 
   test("sharded serve: repeat call serves from executor-resident shard " +

@@ -120,6 +120,23 @@ class DedupServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hits(0L) >= 0.999999 && hits(900000L) >= 0.999999)
   }
 
+  test("shingle-less documents never pair as near-duplicates") {
+    // null text has no tokens, so no shingles (n_sh = 0): two such
+    // documents share nothing, and their 0/0 Jaccard must not read as
+    // a match
+    val sq = spark; import sq.implicits._
+    val short = Seq((900001L, null: String), (900002L, null: String))
+      .toDF("doc_id", "text")
+    assert(Dedup.minhashLshOn(short).count() === 0L,
+      "two shingle-less documents paired in the batch-local pass")
+    val idx = tmp("graft-dedup-sidx")
+    Dedup.writeDedupIndex(spark, sf, idx)
+    Dedup.appendDedupIndex(spark, idx, short.filter(col("doc_id") === 900001L))
+    val hits = Dedup.dedupServeBatch(spark, idx,
+      short.filter(col("doc_id") === 900002L)).collect()
+    assert(hits.isEmpty, s"a shingle-less probe matched: ${hits.mkString(", ")}")
+  }
+
   test("the index is self-describing: serve refuses meta-less dirs; maintained dials must match") {
     // a directory without meta.json is not a dedup index — serving it
     // must fail loudly, not probe with assumed dials (a wrong `shards`

@@ -6,8 +6,10 @@ import org.scalacheck.{Gen, Prop, Properties}
 /** Property tests for the apportionment core (SURVEY §5 / §7.4.1): for
   * ANY order whose detail amounts sum to original_total, the emitted
   * shares sum exactly to final_total — the invariant the reference's
-  * remainder trick exists to guarantee. Runs apportionGroup directly
-  * (pure function of rows + state) under ScalaCheck, no SparkSession.
+  * remainder trick exists to guarantee. Runs the fused order-wide
+  * operator's per-order function directly (pure function of events +
+  * state) under ScalaCheck, no SparkSession: the header arrives with
+  * the first batch of details, the rest follow.
   */
 object ApportionPropertySpec extends Properties("apportion") {
 
@@ -23,14 +25,15 @@ object ApportionPropertySpec extends Properties("apportion") {
 
   private def run(detailCents: List[Long], finalC: Long,
                   batches: List[List[Int]]): List[OrderWideSplit] = {
-    val originalC = detailCents.sum
-    val rows = detailCents.zipWithIndex.map { case (c, i) =>
-      OrderWide(i + 1, 1L, 100L + i, 1, c / 100.0, finalC / 100.0,
-        originalC / 100.0, ts0)
+    val header = OrderEvent(1L, ts0, Some(OrderInfo(1L, 7L, 1L, "1001",
+      finalC / 100.0, detailCents.sum / 100.0, ts0)), None)
+    val details = detailCents.zipWithIndex.map { case (c, i) =>
+      OrderEvent(1L, ts0, None, Some(OrderDetail(i + 1, 1L, 100L + i, 1, c / 100.0, ts0)))
     }
-    val state = new TestGroupState[ApportionState]
-    batches.flatMap { idxs =>
-      Pipelines.apportionGroup(0L)(1L, idxs.map(rows(_)).iterator, state).toList
+    val state = new TestGroupState[OrderWideState]
+    batches.zipWithIndex.flatMap { case (idxs, b) =>
+      val events = (if (b == 0) List(header) else Nil) ++ idxs.map(details(_))
+      Pipelines.orderWideGroup(20000L, streaming = true)(1L, events.iterator, state).toList
     }
   }
 
@@ -58,7 +61,6 @@ object ApportionPropertySpec extends Properties("apportion") {
     }
 }
 
-/** Minimal in-memory GroupState for driving apportionGroup directly. */
 /** Hand-rolled GroupState for driving stateful functions directly
   * (scalatestplus is not in the offline cache). `timedOut` and
   * `lastTimeoutMs` let TTL paths be exercised without the

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** The full reference topology, wired end-to-end: CDC envelopes →
-  * ODS router → typed parse → watermarked stream-stream join →
-  * stateful apportionment (stage 1, ≙ BaseDBMaxwellApp + OrderWideApp),
+  * ODS router → typed parse → the fused order-wide join + stateful
+  * apportionment (stage 1, ≙ BaseDBMaxwellApp + OrderWideApp; its
+  * per-order state survives a restart on the same checkpoint),
   * then apportioned rows → static-dim enrichment → event-time windowed
   * trademark revenue (stage 2, ≙ TrademarkStatApp). The stage split is
   * the same boundary the reference crosses via Kafka (`dws_order_wide`).
@@ -40,8 +41,7 @@ class EndToEndStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(from_json(col("value"), oiSchema).as("o")).select("o.*").as[OrderInfo]
     val od = routed.filter(col("topic") === "ods_order_detail")
       .select(from_json(col("value"), odSchema).as("o")).select("o.*").as[OrderDetail]
-    val wide = Pipelines.apportion(
-      Pipelines.orderWideJoin(oi, od), stateTtlMs = 0L)
+    val wide = Pipelines.orderWide(oi, od)
     val q = wide.writeStream.format("memory").queryName("e2e_wide")
       .outputMode("append").start()
     try {
@@ -70,6 +70,42 @@ class EndToEndStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(out(1).final_detail_amount === 27.00)
       assert(out.map(_.final_detail_amount).sum === 45.00)
     } finally q.stop()
+  }
+
+  test("exactly-once across restart: the per-order state (header and both " +
+      "apportion sums) survives a stop and a restart on the same checkpoint") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val cdcDir = s"$root/cdc"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cdcDir))
+    def feed(name: String, lines: String*): Unit = java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$cdcDir/$name"), lines.mkString("\n"))
+    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val q = Runner.orderWideQuery(spark, cdcDir, s"$root/wide", s"$root/ckpt")
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+    def shares() = spark.read.parquet(s"$root/wide").as[OrderWideSplit]
+      .collect().map(w => w.order_detail_id -> w.final_detail_amount).toMap
+    // phase 1: order 300 (final 45.01 over original 50.00) and its first
+    // detail, 2 × 10.00 → the proportional 18.00; the order stays open
+    feed("b1.json",
+      """{"type":"insert","table":"order_info","data":"{\"id\":300,\"user_id\":7,\"province_id\":1,\"order_status\":\"1001\",\"final_total_amount\":45.01,\"original_total_amount\":50.00,\"create_time\":\"2024-01-01T00:00:10\"}"}""",
+      """{"type":"insert","table":"order_detail","data":"{\"id\":31,\"order_id\":300,\"sku_id\":11,\"sku_num\":2,\"order_price\":10.00,\"create_time\":\"2024-01-01T00:00:12\"}"}""")
+    run()
+    assert(shares() === Map(31L -> 18.00))
+    // phase 2, a new query on the same checkpoint: the second detail
+    // completes the origin sum and takes the remainder 27.01 only if the
+    // header and both sums were recovered (lost state: no header, so no
+    // pair; a lost sum alone would give the proportional 27.00)
+    feed("b2.json",
+      """{"type":"insert","table":"order_detail","data":"{\"id\":32,\"order_id\":300,\"sku_id\":12,\"sku_num\":1,\"order_price\":30.00,\"create_time\":\"2024-01-01T00:00:14\"}"}""",
+      """{"type":"insert","table":"order_info","data":"{\"id\":999,\"user_id\":8,\"province_id\":1,\"order_status\":\"1001\",\"final_total_amount\":1.00,\"original_total_amount\":1.00,\"create_time\":\"2024-01-01T02:00:00\"}"}""",
+      """{"type":"insert","table":"order_detail","data":"{\"id\":91,\"order_id\":999,\"sku_id\":11,\"sku_num\":1,\"order_price\":1.00,\"create_time\":\"2024-01-01T02:00:00\"}"}""")
+    val q2 = run()
+    assert(shares() === Map(31L -> 18.00, 32L -> 27.01, 91L -> 1.00))
+    assert(q2.lastProgress.stateOperators.map(_.numRowsTotal).sum === 0L,
+      "both orders completed: no per-order state may remain")
   }
 
   test("stage 2: apportioned stream → static dim join → windowed trademark revenue") {

@@ -21,14 +21,19 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- apportionment (A3) ----
 
+  private def header(id: Long, fin: Double, orig: Double, t: String) =
+    OrderInfo(id, 7, 1, "1001", fin, orig, ts(t))
+
   test("apportion: shares sum exactly to final_total, last-arriving detail absorbs remainder") {
     import spark.implicits._
     // details sum exactly to original_total (order invariant): 33.33+33.33+33.36
-    val rows = Seq(
-      OrderWide(1, 10, 100, 1, 33.33, 90.00, 100.02, ts("2024-01-01 00:00:00")),
-      OrderWide(2, 10, 101, 1, 33.33, 90.00, 100.02, ts("2024-01-01 00:00:01")),
-      OrderWide(3, 10, 102, 1, 33.36, 90.00, 100.02, ts("2024-01-01 00:00:02")))
-    val out = Pipelines.apportion(rows.toDS()).collect().sortBy(_.order_detail_id)
+    val details = Seq(
+      OrderDetail(1, 10, 100, 1, 33.33, ts("2024-01-01 00:00:00")),
+      OrderDetail(2, 10, 101, 1, 33.33, ts("2024-01-01 00:00:01")),
+      OrderDetail(3, 10, 102, 1, 33.36, ts("2024-01-01 00:00:02")))
+    val out = Pipelines.orderWide(
+        Seq(header(10, 90.00, 100.02, "2024-01-01 00:00:00")).toDS(), details.toDS())
+      .collect().sortBy(_.order_detail_id)
     assert(out.map(_.final_detail_amount).sum === 90.00)
     // proportional share: round(9000*3333/10002 = 2999.1) = 2999 cents
     assert(out(0).final_detail_amount === 29.99)
@@ -41,9 +46,11 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // 25.01 over 3 × 10.00: 2501*1000/3000 = 833.67 cents rounds to 834
     // (a floor would give 833), and the last detail absorbs 833
-    val rows = (1 to 3).map(i =>
-      OrderWide(i, 11, 100 + i, 1, 10.00, 25.01, 30.00, ts("2024-01-01 00:00:00")))
-    val out = Pipelines.apportion(rows.toDS()).collect().sortBy(_.order_detail_id)
+    val details = (1 to 3).map(i =>
+      OrderDetail(i, 11, 100 + i, 1, 10.00, ts("2024-01-01 00:00:00")))
+    val out = Pipelines.orderWide(
+        Seq(header(11, 25.01, 30.00, "2024-01-01 00:00:00")).toDS(), details.toDS())
+      .collect().sortBy(_.order_detail_id)
     assert(out.map(_.final_detail_amount).toSeq === Seq(8.34, 8.34, 8.33))
   }
 
@@ -81,18 +88,16 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("apportion: state carries across micro-batches (MemoryStream)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[OrderWide]
-    // stateTtlMs=0 → NoTimeout: a TTL'd query schedules timeout batches
-    // that keep processAllAvailable from settling without a paced trigger
-    val q = Pipelines.apportion(mem.toDS(), stateTtlMs = 0L)
+    val oiMem = MemoryStream[OrderInfo]
+    val odMem = MemoryStream[OrderDetail]
+    val q = Pipelines.orderWide(oiMem.toDS(), odMem.toDS())
       .writeStream.format("memory").queryName("apportion_out")
       .outputMode("append").start()
     try {
-      mem.addData(
-        OrderWide(1, 20, 100, 1, 40.00, 99.00, 100.00, ts("2024-01-01 00:00:00")))
+      oiMem.addData(header(20, 99.00, 100.00, "2024-01-01 00:00:00"))
+      odMem.addData(OrderDetail(1, 20, 100, 1, 40.00, ts("2024-01-01 00:00:00")))
       q.processAllAvailable()
-      mem.addData(
-        OrderWide(2, 20, 101, 1, 60.00, 99.00, 100.00, ts("2024-01-01 00:00:05")))
+      odMem.addData(OrderDetail(2, 20, 101, 1, 60.00, ts("2024-01-01 00:00:05")))
       q.processAllAvailable()
       val out = spark.table("apportion_out").as[OrderWideSplit]
         .collect().sortBy(_.order_detail_id)
@@ -413,6 +418,75 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
       val out = spark.table("ow_out").as[OrderWide].collect()
       assert(out.map(_.order_detail_id).toSet === Set(11L))
     } finally q.stop()
+  }
+
+  test("orderWide emits exactly orderWideJoin's pairs, with the apportion's " +
+      "shares, and holds no state once every order completes") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the same feed into both operators (a MemoryStream serves one query)
+    val (oiJ, odJ) = (MemoryStream[OrderInfo], MemoryStream[OrderDetail])
+    val (oiF, odF) = (MemoryStream[OrderInfo], MemoryStream[OrderDetail])
+    val joinQ = Pipelines.orderWideJoin(oiJ.toDS(), odJ.toDS())
+      .writeStream.format("memory").queryName("eq_join").outputMode("append").start()
+    val fusedQ = Pipelines.orderWide(oiF.toDS(), odF.toDS())
+      .writeStream.format("memory").queryName("eq_fused").outputMode("append").start()
+    // the join's pairs, batch by batch: the apportion's arrival order
+    val joinBatches = scala.collection.mutable.ArrayBuffer.empty[Seq[OrderWide]]
+    def feed(oi: Seq[OrderInfo], od: Seq[OrderDetail]): Unit = {
+      oiJ.addData(oi); odJ.addData(od); oiF.addData(oi); odF.addData(od)
+      joinQ.processAllAvailable(); fusedQ.processAllAvailable()
+      val seen = joinBatches.flatten.map(_.order_detail_id).toSet
+      joinBatches += spark.table("eq_join").as[OrderWide].collect().toSeq
+        .filterNot(w => seen(w.order_detail_id))
+    }
+    def det(id: Long, order: Long, num: Long, price: Double, t: String) =
+      OrderDetail(id, order, 100 + id, num, price, ts(t))
+    try {
+      // order 1: header with its first detail; a detail 25 s after the
+      // header (outside ±20 s) never pairs. Order 2: its detail comes a
+      // batch before its header. Watermark after: 00:00:35 − 20 s
+      feed(Seq(header(1, 45.01, 50.00, "2024-01-01 00:00:10")),
+        Seq(det(11, 1, 2, 10.00, "2024-01-01 00:00:12"),
+          det(13, 1, 1, 5.00, "2024-01-01 00:00:35"),
+          det(21, 2, 1, 10.00, "2024-01-01 00:00:20")))
+      // order 1 completes a batch later; order 2's header arrives
+      feed(Seq(header(2, 25.01, 30.00, "2024-01-01 00:00:25")),
+        Seq(det(12, 1, 1, 30.00, "2024-01-01 00:00:18"),
+          det(22, 2, 1, 20.00, "2024-01-01 00:00:26")))
+      // both streams move the watermark to 00:01:40
+      feed(Seq(header(9, 5.00, 5.00, "2024-01-01 00:02:00")),
+        Seq(det(91, 9, 1, 5.00, "2024-01-01 00:02:00")))
+      // order 3 is behind the watermark on both sides: dropped
+      feed(Seq(header(3, 7.00, 7.00, "2024-01-01 00:01:00"),
+          header(8, 4.00, 4.00, "2024-01-01 00:10:00")),
+        Seq(det(31, 3, 1, 7.00, "2024-01-01 00:01:05"),
+          det(81, 8, 1, 4.00, "2024-01-01 00:10:00")))
+      val fused = spark.table("eq_fused").as[OrderWideSplit].collect()
+      val pairs = (w: Iterable[(Long, Long)]) => w.toSeq.sorted
+      assert(pairs(fused.map(f => (f.order_detail_id, f.order_id))) ===
+        pairs(joinBatches.flatten.map(w => (w.order_detail_id, w.order_id))))
+      assert(pairs(fused.map(f => (f.order_detail_id, f.order_id))) ===
+        Seq((11L, 1L), (12L, 1L), (21L, 2L), (22L, 2L), (81L, 8L), (91L, 9L)))
+      // expected shares: the shared apportion function folded over the
+      // join's pairs in arrival order (order_detail_id within a batch)
+      val cents = (d: Double) => Math.round(d * 100)
+      val sums = scala.collection.mutable.Map.empty[Long, ApportionState]
+      val want = joinBatches.flatMap(_.sortBy(_.order_detail_id).map { w =>
+        val (share, next) = Pipelines.apportionShare(
+          sums.getOrElse(w.order_id, ApportionState(0L, 0L)),
+          cents(w.sku_price * w.sku_num), cents(w.original_total_amount),
+          cents(w.final_total_amount))
+        sums(w.order_id) = next
+        w.order_detail_id -> share
+      }).toMap
+      assert(fused.map(f => f.order_detail_id -> cents(f.final_detail_amount)).toMap === want)
+      // order 1: 18.00 + the remainder 27.01; order 2: 8.34 + 16.67
+      assert(want === Map(11L -> 1800L, 12L -> 2701L, 21L -> 834L, 22L -> 1667L,
+        81L -> 400L, 91L -> 500L))
+      assert(fusedQ.lastProgress.stateOperators.map(_.numRowsTotal).sum === 0L,
+        "every order completed: no per-order state may remain")
+    } finally { joinQ.stop(); fusedQ.stop() }
   }
 
   test("left-outer interval join emits unmatched details with matched=false after watermark") {

@@ -2,15 +2,19 @@ package graft.streaming
 
 import graft.{GraftSession, Tables}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** The full LAYERED topology under the repeatable test gate (the
   * DriveTopology assertion as a spec, single-chunk feed at sf0.001):
   * three concurrent streaming queries chained through FileStreamSink/
-  * Source edges — router → interval join + apportionment → per-batch-
-  * dim-refreshed trademark aggregation — must reproduce the BATCH
+  * Source edges — router → fused order-wide join + apportionment →
+  * per-batch-dim-refreshed trademark aggregation — must reproduce the BATCH
   * trademark query cent-for-cent. This is the reference's actual
   * multi-app deployment shape run end-to-end, not stage-by-stage
   * (EndToEndStreamSpec covers the stages individually). */
@@ -25,19 +29,42 @@ class TopologySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  test("chained streaming trademark totals == batch q1, cent for cent") {
+  // one drained run of the chain, shared by the tests below: its
+  // output root and its (stopped) wide query
+  private lazy val drained: (String, StreamingQuery) = {
     val root = java.nio.file.Files.createTempDirectory("graft-topospec").toString
     Topology.writeCdcFixture(spark, sf, s"$root/cdc")
     val chain = Topology.start(spark, s"$root/cdc",
       s"$root/routed", s"$root/wide", s"$root/agg", s"$root/ckpt",
       () => Tables.part(spark, sf).select(col("p_partkey"), col("p_brand")))
     try chain.drain() finally chain.stopAll()
+    (root, chain.wide)
+  }
+
+  test("chained streaming trademark totals == batch q1, cent for cent") {
+    val (root, _) = drained
     val got = Topology.trademarkTotals(spark, s"$root/agg")
     val want = graft.operators.GmallQueries.trademarkStat(spark, sf)
       .select(col("tm_name"), Tables.cents(col("amount")).as("amount_c"))
     assert(got.count() > 0)
     assert(want.exceptAll(got).count() === 0L)
     assert(got.exceptAll(want).count() === 0L)
+  }
+
+  test("the wide stage plans one shuffle into one stateful operator " +
+      "with one state store per shuffle partition") {
+    // exchange and state-store counts are deterministic: a change that
+    // re-adds a shuffle (or the interval join's 4 stores per partition)
+    // fails here at plan time
+    val (_, wide) = drained
+    val plan = wide.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.size === 1, plan.treeString)
+    assert(plan.collect { case s: StateStoreWriter => s }.size === 1, plan.treeString)
+    val ops = wide.lastProgress.stateOperators
+    assert(ops.length === 1)
+    assert(ops.head.numStateStoreInstances === 4)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
   }
 
   // ---- breach attribution (Topology.classifyOverBudget) — the r17

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Paths}
 import graft.GraftSession
 import graft.streaming.Runner
 
-/** Exactly-once demonstration: the apportionment state (running
-  * origin/split sums per order) must survive a full process restart via
-  * the checkpoint. Phase 1 feeds one detail of a two-detail order and
+/** Exactly-once demonstration: the order-wide state (the header and the
+  * running origin/split sums per order) must survive a full process
+  * restart via the checkpoint (EndToEndStreamSpec runs the same two
+  * phases in one JVM). Phase 1 feeds one detail of a two-detail order and
   * exits; phase 2 (fresh JVM invocation) feeds the second detail — if
   * state recovered, the second detail completes the origin sum and gets
   * the remainder, and Σ shares == final_total exactly. final_total is

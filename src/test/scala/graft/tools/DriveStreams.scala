@@ -29,15 +29,9 @@ object DriveStreams {
     q2.processAllAvailable(); q2.stop()
     spark.read.parquet(s"$outRoot/router").orderBy("topic").show(20, false)
 
-    println("=== Order-wide streaming (CDC → join → apportion, file edges) ===")
-    // production config: state TTL on → timeout micro-batches fire every
-    // trigger, so processAllAvailable never settles; drive wall-clock.
+    println("=== Order-wide streaming (CDC → fused join + apportion, file edges) ===")
     val q3 = Runner.orderWideQuery(spark, cdcDir, s"$outRoot/wide", s"$outRoot/wide_ckpt")
-    val deadline = System.nanoTime() + 45L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadline &&
-      !new java.io.File(s"$outRoot/wide/_spark_metadata").exists()) Thread.sleep(1000)
-    Thread.sleep(12000) // a couple more triggers so the join emits matched pairs
-    q3.stop()
+    q3.processAllAvailable(); q3.stop()
     spark.read.parquet(s"$outRoot/wide").orderBy("order_detail_id").show(20, false)
 
     spark.stop()

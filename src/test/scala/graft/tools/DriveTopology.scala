@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** End-to-end drive of the reference's LAYERED topology (router →
-  * order-wide join+apportion → trademark stat) as three CONCURRENT
+  * fused order-wide join+apportion → trademark stat) as three CONCURRENT
   * streaming queries chained through file edges in one session —
   * `sbt "Test/runMain graft.tools.DriveTopology [sfDir] [triggerSec]"`.
   *
