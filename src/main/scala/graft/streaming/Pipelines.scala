@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -81,6 +81,13 @@ object Pipelines {
         explode(col("data")).as("value"))
       .filter(col("value").isNotNull && col("value") =!= "")
 
+  /** The order-wide skew window (the reference's 20 s join window): a
+    * detail pairs with its order's header iff their event times are at
+    * most this far apart. Also the watermark delay of both order-wide
+    * operators. */
+  private val OrderSkew = "20 seconds"
+  private val OrderSkewMs = 20000L
+
   /** J1/W1 stream-stream join (`dws/OrderWideApp.scala:91-111`): the
     * reference's 20 s sliding processing-time windows + Redis dedup
     * become an event-time interval join with watermarks — exact
@@ -89,7 +96,7 @@ object Pipelines {
     * are checked against, and the operator Bench's `stream_join`
     * section times. */
   def orderWideJoin(orderInfo: Dataset[OrderInfo], orderDetail: Dataset[OrderDetail],
-                    maxSkew: String = "20 seconds"): Dataset[OrderWide] = {
+                    maxSkew: String = OrderSkew): Dataset[OrderWide] = {
     import orderInfo.sparkSession.implicits._
     val oi = orderInfo.withColumnRenamed("create_time", "oi_time")
       .withWatermark("oi_time", maxSkew)
@@ -119,7 +126,7 @@ object Pipelines {
     * `dws/OrderWideApp.scala:91-111`). The unmatched rows are the
     * monitoring signal the reference never had. */
   def orderWideJoinLeftOuter(orderInfo: Dataset[OrderInfo], orderDetail: Dataset[OrderDetail],
-                             maxSkew: String = "20 seconds"): DataFrame = {
+                             maxSkew: String = OrderSkew): DataFrame = {
     val oi = orderInfo.withColumnRenamed("create_time", "oi_time")
       .withWatermark("oi_time", maxSkew)
     val od = orderDetail
@@ -162,13 +169,13 @@ object Pipelines {
     * order id, the way the reference keeps everything it knows about an
     * order under that id (the join's Redis dedup set and the two
     * apportion sums). Header and detail events form one watermarked
-    * stream (delay `maxSkew`), grouped by the `order_id` column, so a
+    * stream (delay [[OrderSkew]]), grouped by the `order_id` column, so a
     * single shuffle feeds the operator and a trigger commits one state
     * store per partition. Per order the state holds the header, the
     * details waiting for it, and the running [[ApportionState]] sums.
     *
     *  - Matching is [[orderWideJoin]]'s rule: a detail pairs with its
-    *    order's header iff `|od_time − oi_time| ≤ maxSkew`; a row with a
+    *    order's header iff `|od_time − oi_time| ≤ 20 s`; a row with a
     *    null order id or event time never pairs, and a row behind the
     *    watermark is dropped. Each output row carries the header's
     *    create_time, like the join's.
@@ -177,7 +184,7 @@ object Pipelines {
     *  - An order's state is removed as soon as Σ detail == original
     *    (every detail has its share), and an incomplete order expires
     *    once the watermark passes its event time (the header's, or the
-    *    latest waiting detail's) plus `maxSkew`. So state holds only
+    *    latest waiting detail's) plus 20 s. So state holds only
     *    the orders still in flight.
     *
     * Deliberate divergences from [[orderWideJoin]] followed by a
@@ -189,30 +196,30 @@ object Pipelines {
     *    header that no longer exists and expires, where the join
     *    re-pairs it with the header it still holds and the apportion
     *    counts it twice;
+    *  - a detail worth 0 cents (a free line) that arrives in a later
+    *    micro-batch than the detail completing its order: it expires
+    *    unmatched, where the join pairs it and the apportion gives it
+    *    the remainder, 0;
     *  - one watermark over both streams, where the join takes the
     *    minimum of one per side.
     *
     * Runs on batch Datasets too, where each order is one call. */
-  def orderWide(orderInfo: Dataset[OrderInfo], orderDetail: Dataset[OrderDetail],
-                maxSkew: String = "20 seconds"): Dataset[OrderWideSplit] = {
+  def orderWide(orderInfo: Dataset[OrderInfo],
+                orderDetail: Dataset[OrderDetail]): Dataset[OrderWideSplit] = {
     import orderInfo.sparkSession.implicits._
-    val header = struct(Encoders.product[OrderInfo].schema.fieldNames.map(orderInfo.col): _*)
-    val detail = struct(Encoders.product[OrderDetail].schema.fieldNames.map(orderDetail.col): _*)
-    def absent(c: Column, ds: Dataset[_]) = lit(null).cast(ds.select(c).schema.head.dataType)
+    val (infoT, detailT) = (Encoders.product[OrderInfo].schema, Encoders.product[OrderDetail].schema)
     val events = orderInfo.select(col("id").as("order_id"),
-        col("create_time").as("event_time"), header.as("header"),
-        absent(detail, orderDetail).as("detail"))
-      .unionByName(orderDetail.select(col("order_id"),
         col("create_time").as("event_time"),
-        absent(header, orderInfo).as("header"), detail.as("detail")))
+        struct(infoT.fieldNames.map(orderInfo.col): _*).as("header"),
+        lit(null).cast(detailT).as("detail"))
+      .unionByName(orderDetail.select(col("order_id"),
+        col("create_time").as("event_time"), lit(null).cast(infoT).as("header"),
+        struct(detailT.fieldNames.map(orderDetail.col): _*).as("detail")))
       .filter(col("order_id").isNotNull && col("event_time").isNotNull)
-    import org.apache.spark.sql.catalyst.util.IntervalUtils
-    val skewMs = IntervalUtils.getDuration(IntervalUtils.fromIntervalString(maxSkew),
-      java.util.concurrent.TimeUnit.MILLISECONDS, 31)
-    events.withWatermark("event_time", maxSkew)
+    events.withWatermark("event_time", OrderSkew)
       .groupBy(col("order_id")).as[Long, OrderEvent]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        orderWideGroup(skewMs, events.isStreaming))
+        orderWideGroup(OrderSkewMs, events.isStreaming))
   }
 
   /** `streaming` false: a batch query calls each order once, so an

@@ -489,6 +489,42 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally { joinQ.stop(); fusedQ.stop() }
   }
 
+  test("orderWide: a 0-cent detail arriving a batch after its order completed " +
+      "expires unmatched, where orderWideJoin pairs it") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val (oiJ, odJ) = (MemoryStream[OrderInfo], MemoryStream[OrderDetail])
+    val (oiF, odF) = (MemoryStream[OrderInfo], MemoryStream[OrderDetail])
+    val joinQ = Pipelines.orderWideJoin(oiJ.toDS(), odJ.toDS())
+      .writeStream.format("memory").queryName("zero_join").outputMode("append").start()
+    val fusedQ = Pipelines.orderWide(oiF.toDS(), odF.toDS())
+      .writeStream.format("memory").queryName("zero_fused").outputMode("append").start()
+    def feed(oi: Seq[OrderInfo], od: Seq[OrderDetail]): Unit = {
+      oiJ.addData(oi); odJ.addData(od); oiF.addData(oi); odF.addData(od)
+      joinQ.processAllAvailable(); fusedQ.processAllAvailable()
+    }
+    try {
+      // order 1 completes in the first batch: 10.00 of 10.00
+      feed(Seq(header(1, 9.00, 10.00, "2024-01-01 00:00:10")),
+        Seq(OrderDetail(11, 1, 101, 1, 10.00, ts("2024-01-01 00:00:11"))))
+      // a free line, inside ±20 s and ahead of the watermark
+      feed(Nil, Seq(OrderDetail(12, 1, 102, 1, 0.00, ts("2024-01-01 00:00:12"))))
+      val joined = spark.table("zero_join").as[OrderWide].collect()
+      assert(joined.map(_.order_detail_id).sorted.toSeq === Seq(11L, 12L))
+      val fused = spark.table("zero_fused").as[OrderWideSplit].collect()
+      assert(fused.map(f => (f.order_detail_id, f.final_detail_amount)).toSeq ===
+        Seq((11L, 9.00)))
+      // the free line waits for a header that is gone, then expires
+      assert(fusedQ.lastProgress.stateOperators.map(_.numRowsTotal).sum === 1L)
+      feed(Seq(header(9, 5.00, 5.00, "2024-01-01 00:02:00")),
+        Seq(OrderDetail(91, 9, 109, 1, 5.00, ts("2024-01-01 00:02:00"))))
+      feed(Nil, Nil)
+      assert(spark.table("zero_fused").as[OrderWideSplit].collect()
+        .map(_.order_detail_id).sorted.toSeq === Seq(11L, 91L))
+      assert(fusedQ.lastProgress.stateOperators.map(_.numRowsTotal).sum === 0L)
+    } finally { joinQ.stop(); fusedQ.stop() }
+  }
+
   test("left-outer interval join emits unmatched details with matched=false after watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
