@@ -543,15 +543,16 @@ object Bench {
     val streamRateRocks = streamSection("stream_dau_rocksdb") {
       withRocks(dauRate("stream_dau_rocksdb"))
     }
-    // stream-stream interval join throughput (the reference's DWS core,
-    // J1/W1): lineitem+orders as two file streams through
-    // Pipelines.orderWideJoin. The corpus's synthetic ship/order dates
-    // are ±2400 days apart, so event time derives from the join key on
-    // both sides (same value → pairs land inside the 20 s skew window) —
-    // the state-store insert/range-probe/watermark path is exercised
-    // with the real 1:N key distribution; only the timestamps are
-    // manufactured. Rows/sec over total input rows; joined-row count is
-    // accumulated and a zero-match run reports -1 instead of a rate.
+    // order-wide stream throughput (the reference's DWS core, J1/W1/F5):
+    // lineitem+orders as two file streams through Pipelines.orderWide,
+    // the fused join + apportion the pipelines run. The corpus's
+    // synthetic ship/order dates are ±2400 days apart, so event time
+    // derives from the join key on both sides (same value → pairs land
+    // inside the 20 s skew window) — the keyed-state update and
+    // watermark-timeout path is exercised with the real 1:N key
+    // distribution; only the timestamps are manufactured. Rows/sec over
+    // total input rows; paired-row count is accumulated and a
+    // zero-match run reports -1 instead of a rate.
     val streamJoinRate: Double = streamSection("stream_join") {
       import org.apache.spark.sql.functions._
       val nIn = spark.read.parquet(s"$sfDir/lineitem.parquet").count() +
@@ -575,9 +576,9 @@ object Bench {
         val acc = spark.sparkContext.longAccumulator("graft-bench-joined")
         val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-jckpt").toString
         val sec = timedStream(partitions = 16) { () =>
-          streaming.Pipelines.orderWideJoin(oi, od)
+          streaming.Pipelines.orderWide(oi, od)
             .writeStream
-            .foreachBatch((b: org.apache.spark.sql.Dataset[streaming.OrderWide], _: Long) =>
+            .foreachBatch((b: org.apache.spark.sql.Dataset[streaming.OrderWideSplit], _: Long) =>
               acc.add(b.count()))
             .option("checkpointLocation", ckpt)
             .start()

@@ -19,6 +19,17 @@ object GraftSession {
     // either corpus vintage loads.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // Tungsten page size, fixed at the floor of Spark's own formula
+    // (heap / cores / 16, clamped to [1 MB, 64 MB]). Every
+    // BytesToBytesMap — behind each string-keyed broadcast relation,
+    // hash aggregate and sorter — allocates at least one page, so at
+    // -Xmx8g and local[4] the formula's 64 MB page made a 31-row
+    // broadcast hold 64 MB of heap, in humongous G1 regions that stay
+    // live across collections. At 1 MB (under G1's 2 MB humongous
+    // threshold at an 8g heap) each map grows a page at a time with
+    // its data; a record larger than a page still gets a page of its
+    // own size.
+    .config("spark.buffer.pageSize", "1m")
 
   /** Production-streaming additions: RocksDB state store — keyed state
     * (dedup at 1e9+ keys, join state, apportionment sums) spills off

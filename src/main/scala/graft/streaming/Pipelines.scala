@@ -92,9 +92,8 @@ object Pipelines {
     * reference's 20 s sliding processing-time windows + Redis dedup
     * become an event-time interval join with watermarks — exact
     * semantics, bounded state, no duplicate pairs. The chain runs the
-    * fused [[orderWide]] instead; this join is the reference its pairs
-    * are checked against, and the operator Bench's `stream_join`
-    * section times. */
+    * fused [[orderWide]] instead, which Bench's `stream_join` section
+    * times; this join is the reference its pairs are checked against. */
   def orderWideJoin(orderInfo: Dataset[OrderInfo], orderDetail: Dataset[OrderDetail],
                     maxSkew: String = OrderSkew): Dataset[OrderWide] = {
     import orderInfo.sparkSession.implicits._

@@ -92,12 +92,12 @@ object Topology {
     * downstream source must be created AFTER its upstream sink has
     * committed a batch (else it would fall back to plain directory
     * listing and could observe in-progress files). `loadSkuDim` is
-    * re-invoked every agg micro-batch — the reference's per-batch dim
-    * refresh (S5/J2). Triggers default to ASAP so drains are not paced
-    * by a processing-time trigger; `triggerInterval` (e.g. "5 seconds")
-    * switches every stage onto the reference's batch clock — the
-    * local[4] parity measurement (BASELINE.md's derived latency
-    * target) runs the chain under the reference's own
+    * re-invoked every non-empty agg micro-batch — the reference's
+    * per-batch dim refresh (S5/J2). Triggers default to ASAP so drains
+    * are not paced by a processing-time trigger; `triggerInterval`
+    * (e.g. "5 seconds") switches every stage onto the reference's batch
+    * clock — the local[4] parity measurement (BASELINE.md's derived
+    * latency target) runs the chain under the reference's own
     * `Seconds(5)`/local[4] envelope. */
   def start(spark: SparkSession, cdcDir: String, routedDir: String,
             wideDir: String, aggDir: String, ckptRoot: String,
@@ -136,14 +136,17 @@ object Topology {
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$ckptRoot/agg")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.join(broadcast(loadSkuDim()),
-            batch("sku_id") === col("p_partkey"))
-          .groupBy(col("p_brand").as("tm_name"))
-          .agg(sum(Tables.cents(col("final_detail_amount"))).as("amount_c"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(aggDir)
+        // wide's no-data micro-batches still commit an empty file, and
+        // an empty batch has nothing to aggregate: skip the dim load
+        if (!batch.isEmpty)
+          batch.join(broadcast(loadSkuDim()),
+              batch("sku_id") === col("p_partkey"))
+            .groupBy(col("p_brand").as("tm_name"))
+            .agg(sum(Tables.cents(col("final_detail_amount"))).as("amount_c"))
+            .withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(aggDir)
       })
       .start()
     Chain(router, wide, agg)

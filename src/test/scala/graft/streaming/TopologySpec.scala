@@ -30,19 +30,36 @@ class TopologySpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   // one drained run of the chain, shared by the tests below: its
-  // output root and its (stopped) wide query
-  private lazy val drained: (String, StreamingQuery) = {
+  // output root, its (stopped) queries and how often agg loaded the dim
+  private lazy val drained: (String, Topology.Chain, Int) = {
     val root = java.nio.file.Files.createTempDirectory("graft-topospec").toString
     Topology.writeCdcFixture(spark, sf, s"$root/cdc")
+    val dimLoads = new java.util.concurrent.atomic.AtomicInteger
     val chain = Topology.start(spark, s"$root/cdc",
       s"$root/routed", s"$root/wide", s"$root/agg", s"$root/ckpt",
-      () => Tables.part(spark, sf).select(col("p_partkey"), col("p_brand")))
-    try chain.drain() finally chain.stopAll()
-    (root, chain.wide)
+      () => {
+        dimLoads.incrementAndGet()
+        Tables.part(spark, sf).select(col("p_partkey"), col("p_brand"))
+      })
+    try {
+      chain.drain()
+      // re-send the fixture's first 400 s of event time (it starts at
+      // 22:13:20): all of it is behind wide's watermark, so wide emits
+      // an empty micro-batch that agg reads as a batch of 0 rows (the
+      // totals stay the batch answer)
+      import spark.implicits._
+      val late = spark.read.text(s"$root/cdc").as[String]
+        .filter(get_json_object(col("value"), "$.data.create_time") < "2023-11-14 22:20:00")
+        .collect()
+      assert(late.nonEmpty)
+      late.toSeq.toDS().write.mode("append").text(s"$root/cdc")
+      chain.drain()
+    } finally chain.stopAll()
+    (root, chain, dimLoads.get)
   }
 
   test("chained streaming trademark totals == batch q1, cent for cent") {
-    val (root, _) = drained
+    val (root, _, _) = drained
     val got = Topology.trademarkTotals(spark, s"$root/agg")
     val want = graft.operators.GmallQueries.trademarkStat(spark, sf)
       .select(col("tm_name"), Tables.cents(col("amount")).as("amount_c"))
@@ -56,7 +73,7 @@ class TopologySpec extends AnyFunSuite with BeforeAndAfterAll {
     // exchange and state-store counts are deterministic: a change that
     // re-adds a shuffle (or the interval join's 4 stores per partition)
     // fails here at plan time
-    val (_, wide) = drained
+    val (_, Topology.Chain(_, wide, _), _) = drained
     val plan = wide.asInstanceOf[StreamingQueryWrapper].streamingQuery
       .lastExecution.executedPlan
     assert(plan.collect { case e: ShuffleExchangeExec => e }.size === 1, plan.treeString)
@@ -65,6 +82,18 @@ class TopologySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ops.length === 1)
     assert(ops.head.numStateStoreInstances === 4)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+  }
+
+  test("agg loads the sku dim only for micro-batches that carry rows") {
+    val (_, chain, dimLoads) = drained
+    // input rows of each micro-batch that ran (idle progress has no addBatch)
+    def inputs(q: StreamingQuery) = q.recentProgress
+      .filter(_.durationMs.containsKey("addBatch")).map(_.numInputRows).toSeq
+    // wide ran a no-data micro-batch once the watermark advanced, and
+    // agg ran one micro-batch of 0 rows (the late slice's)
+    assert(inputs(chain.wide).contains(0L))
+    assert(inputs(chain.agg).contains(0L))
+    assert(dimLoads === inputs(chain.agg).count(_ > 0))
   }
 
   // ---- breach attribution (Topology.classifyOverBudget) — the r17
