@@ -733,19 +733,20 @@ object Bench {
     }
     // the two streaming INTAKE loops — the library's flagship
     // deployment shapes (r9 verdict Next #2: measured ad hoc by
-    // TimeDedupServe/TimeCurateIntake, now round-over-round comparable
-    // on the artifact). The documents table is split into 4 files and
-    // fed as 4 micro-batches (maxFilesPerTrigger=1): each batch probes
-    // the index maintained by the PREVIOUS batches, so the measured
-    // path is the real loop (probe + intra-batch first-wins + two
-    // exactly-once sinks), not a single-batch special case. Rate over
+    // TimeDedupServe and the round-9 intake study (SCALE.md), now
+    // round-over-round comparable on the artifact). The documents
+    // table is split into 4 files and fed as 4 micro-batches
+    // (maxFilesPerTrigger=1): each batch probes the index maintained
+    // by the PREVIOUS batches, so the measured path is the real loop
+    // (probe + intra-batch first-wins + two exactly-once sinks), not
+    // a single-batch special case. Rate over
     // input docs; fresh index/decisions/checkpoint per attempt (a
     // reused index would change the work); the 4-file fixture is
     // shared, built once untimed. Guard: one decision row per doc, or
     // -1. For curate_intake the NB model + eval-gram builds land
     // INSIDE the timed window (they amortize over a real stream's
-    // lifetime, but belong in an honest single-feed number —
-    // TimeCurateIntake's convention).
+    // lifetime, but belong in an honest single-feed number — the
+    // round-9 intake study's convention).
     val intakeFixtureMemo = new java.util.concurrent.atomic.AtomicReference[String]()
     def intakeFixture(): String = {
       import org.apache.spark.sql.functions.col
@@ -786,11 +787,11 @@ object Bench {
     // amortized intake (r10 verdict Next #7): the 4-file sf feed above
     // measures the ~15-job/trigger FIXED-COST FLOOR (1,250 docs per
     // trigger at sf0.1); production batches are bigger, and the
-    // TimeCurateIntake study showed docs/s rising with batch size until
-    // stage work dominates. Carry that amortized point on the artifact:
-    // ONE 20 k-doc trigger over the SyntheticDocs corpus (distinct
-    // ~40-token docs, ~2% near-dups — replicating the 5 000 testdata
-    // docs would drown the dup path with exact copies). Models and
+    // round-10 intake study (SCALE.md) showed docs/s rising with batch
+    // size until stage work dominates. Carry that amortized point on
+    // the artifact: ONE 20 k-doc trigger over the SyntheticDocs corpus
+    // (distinct ~40-token docs, ~2% near-dups — replicating the 5 000
+    // testdata docs would drown the dup path with exact copies). Models and
     // eval-dicts still build from sfDir inside the timed window, the
     // honest single-feed convention shared with the lines above.
     val intake20kFixtureMemo = new java.util.concurrent.atomic.AtomicReference[String]()

@@ -938,6 +938,21 @@ object Dedup {
       .withColumn("shard", pmod(col("bucket"), lit(shards.toLong)).cast("int"))
   }
 
+  /** The `shards` default of a STREAM-MAINTAINED dedup index
+    * ([[appendDedupIndexBatch]], [[graft.streaming.Runner.dedupIntakeQuery]],
+    * [[graft.streaming.Runner.curateIntakeQuery]]): one shard. A shard
+    * level must earn its pruning (SCALE.md), and an intake micro-batch
+    * never lets it: ~200 docs × 16 bands ≈ 3 200 buckets touch every
+    * one of 64 shards. 64 shards still cost every micro-batch 64
+    * `shard=` directories under dynamic overwrite and, in
+    * [[dedupServeBatch]], a second shingle-hash plan plus a collect to
+    * find the shard set. With one shard a batch writes one bucket file
+    * and the serve skips that pass. The at-rest [[writeDedupIndex]]
+    * keeps 64, where a small probe batch can prune. An intake index
+    * written with 64 shards resumes only with `shards = 64`; any other
+    * value is refused by the dial-mismatch check. */
+  val maintainedShards: Int = 1
+
   /** The d3 LSH index AT REST — dedup-at-intake's build half (the
     * `writeAnnIndex` deployment split applied to near-dup detection):
     * two relations under `out/`,
@@ -1078,10 +1093,14 @@ object Dedup {
     * collected eagerly at build, one cheap pass over the bounded
     * batch — dynamic partition pruning cannot express this, because
     * an arbitrary probe batch carries no selective predicate for
-    * Catalyst's DPP heuristic to accept); exact verification touches
-    * only candidates' shingle arrays, read through the
-    * range-clustered shingles relation (file/row-group pruned by the
-    * candidate ids). No stage scans the corpus.
+    * Catalyst's DPP heuristic to accept; a one-shard index, the
+    * stream-maintained default, leaves nothing to prune, so the pass
+    * and the filter are skipped); exact verification touches only
+    * candidates' shingle arrays, read through the range-clustered
+    * shingles relation (file/row-group pruned by the candidate ids).
+    * No stage scans the corpus. Both relations are read with the
+    * schema in their footers ([[graft.sources.Layout.readParquet]]),
+    * so over a one-shard index building the frame runs no Spark job.
     *
     * LSH dials come from the INDEX's own `_meta.json` — a caller
     * repeating them could silently repeat them WRONG: a mismatched
@@ -1108,10 +1127,14 @@ object Dedup {
     // DedupServeSpec pins `pending >= 1` after the builder. Cost: one
     // uncached shingle-hash pass over the (bounded) probe batch for
     // the shard set; the two expensive consumers share the cache.
-    val probedShards = bandedOf(
-      withShingleHashes(batch, "text").select(col("doc_id"), col("sh_hashes")),
-      numHashes, bands, shards)
-      .select(col("shard")).distinct().collect().map(_.getInt(0))
+    // Skipped for a one-shard index (maintainedShards): its single
+    // partition is the whole relation, so there is nothing to prune.
+    val probedShards =
+      if (shards == 1) None
+      else Some(bandedOf(
+        withShingleHashes(batch, "text").select(col("doc_id"), col("sh_hashes")),
+        numHashes, bands, shards)
+        .select(col("shard")).distinct().collect().map(_.getInt(0)))
     val q = ScratchCache.arm( // feeds probes AND the verify join
       withShingleHashes(batch, "text")
         .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
@@ -1119,13 +1142,14 @@ object Dedup {
         .filter(col("n_sh") > 0))
     val probes = bandedOf(q, numHashes, bands, shards)
       .select(col("doc_id").as("query_id"), col("band"), col("bucket"))
-    val idx = spark.read.parquet(s"$indexPath/buckets")
-      .filter(col("shard").isin(probedShards.toSeq: _*))
+    val buckets = graft.sources.Layout.readParquet(spark, s"$indexPath/buckets")
+    val idx = probedShards.fold(buckets)(s =>
+      buckets.filter(col("shard").isin(s.toSeq: _*)))
     val cand = idx.join(broadcast(probes), Seq("band", "bucket"))
       // a re-ingested identical id must not match itself
       .filter(col("doc_id") =!= col("query_id"))
       .select(col("query_id"), col("doc_id").as("match_id")).distinct()
-    val sh = spark.read.parquet(s"$indexPath/shingles")
+    val sh = graft.sources.Layout.readParquet(spark, s"$indexPath/shingles")
     cand
       .join(sh.select(col("doc_id").as("match_id"), col("sh_hashes").as("m_sh"),
         col("n_sh").as("n_m")), "match_id")
@@ -1165,18 +1189,20 @@ object Dedup {
   }
 
   /** [[appendDedupIndex]]'s EXACTLY-ONCE streaming form — index rows
-    * land under (batch_id, band, shard) / (batch_id) with write-scoped
+    * land under (batch_id, shard) / (batch_id) with write-scoped
     * dynamic partition OVERWRITE (the annIndexMaintainQuery recipe): a
     * replayed micro-batch rewrites its own partitions instead of
     * appending duplicates — and duplicate index rows are not benign
     * (a duplicated candidate would double-verify; a duplicated shingle
-    * row would double-match). A maintained index is a directory the
-    * stream ALONE writes (partition-discovery depth must stay uniform,
-    * so a [[writeDedupIndex]] layout cannot be mixed in). */
+    * row would double-match). At the default [[maintainedShards]] a
+    * batch's buckets are ONE file under `batch_id=B/shard=0`. A
+    * maintained index is a directory the stream ALONE writes
+    * (partition-discovery depth must stay uniform, so a
+    * [[writeDedupIndex]] layout cannot be mixed in). */
   def appendDedupIndexBatch(spark: SparkSession, indexPath: String,
                             newDocs: DataFrame, batchId: Long,
                             numHashes: Int = 64, bands: Int = 16,
-                            shards: Int = 64): Unit = {
+                            shards: Int = maintainedShards): Unit = {
     // first maintained batch CREATES the meta; later batches (and any
     // replay) must match it — a restarted stream with different dials
     // would otherwise silently corrupt the index's banding
@@ -1213,13 +1239,15 @@ object Dedup {
     * except `excludeBatchId`, the in-flight batch the checkpoint can
     * still replay) fold into their `batch_id=-1` bases via
     * [[graft.sources.BatchFold]]'s crash-safe staged swap — buckets
-    * back to one file per shard (exactly the [[writeDedupIndex]]
-    * layout whose file-count round 9 measured probe latency tracking:
-    * 5.74 → 1.24 s on a 16× cut), shingles back to one range-clustered
+    * back to one file per shard (the [[writeDedupIndex]] layout whose
+    * file count round 9 measured probe latency tracking: 5.74 → 1.24 s
+    * on a 16× cut; at the default [[maintainedShards]] that is one
+    * `shard=0` file in the base), shingles back to one range-clustered
     * relation (doc-id pruning restored across the base). Without the
     * fold, [[graft.streaming.Runner.dedupIntakeQuery]] accretes one
-    * file per batch per touched shard FOREVER, eroding that win one
-    * trigger at a time. The two relations fold one after the other; a
+    * bucket file per batch (per touched shard, on an index built with
+    * more than one) FOREVER, eroding that win one trigger at a time.
+    * The two relations fold one after the other; a
     * crash between them leaves both complete and correct, just at
     * asymmetric depth, and the next threshold crossing folds the
     * laggard — each relation's swap is independently recovered
@@ -1262,7 +1290,7 @@ object Dedup {
     * other stages). */
   def intakeDupHits(spark: SparkSession, indexPath: String, batch: DataFrame,
                     numHashes: Int = 64, bands: Int = 16,
-                    shards: Int = 64, minJ: Double = lshMinJ): DataFrame = {
+                    minJ: Double = lshMinJ): DataFrame = {
     val indexHits =
       if (new java.io.File(s"$indexPath/buckets").exists())
         dedupServeBatch(spark, indexPath, batch, minJ)

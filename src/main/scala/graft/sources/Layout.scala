@@ -113,4 +113,33 @@ object Layout {
     val nFiles = math.max(1L, (rows + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
     in.coalesce(nFiles).write.mode("overwrite").parquet(outPath)
   }
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark
+    * infers a parquet relation's schema with a one-task job that reads
+    * one data file's footer; here the driver reads that footer itself
+    * and takes the Spark schema every Spark writer stores in it, so a
+    * per-trigger read plans with no job. Partition columns are still
+    * discovered from the `key=value/` directories. Falls back to plain
+    * inference when no visible data file carries that schema. */
+  def readParquet(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    def firstFile(p: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).iterator
+        .filter(st => ContentStamp.isVisible(st.getPath.getName))
+        .map(st => if (st.isDirectory) firstFile(st.getPath) else Some(st))
+        .collectFirst { case Some(st) => st }
+    val schema = (if (fs.exists(root)) firstFile(root) else None).flatMap { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }
+    schema.fold(spark.read.parquet(path))(json => spark.read
+      .schema(org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .parquet(path))
+  }
 }

@@ -733,7 +733,12 @@ object Runner {
     * the annIndexMaintainQuery recipe: decisions partition by
     * `batch_id`; index rows land under (batch_id, shard) /
     * (batch_id) dynamic partition overwrite, so a replayed batch
-    * rewrites its own partitions instead of appending duplicates.
+    * rewrites its own partitions instead of appending duplicates. At
+    * the default `shards` ([[graft.operators.Dedup.maintainedShards]],
+    * one) a batch's buckets are one `batch_id=B/shard=0` file: a
+    * micro-batch's buckets cover every shard of a wider index, so more
+    * shards would prune nothing. An index written with 64 shards
+    * resumes only with `shards = 64`.
     *
     * Like a maintained ANN index, the index directory is one the
     * stream ALONE writes (partition-discovery depth must be uniform —
@@ -752,7 +757,7 @@ object Runner {
     * shingles back to one range-clustered run) BEFORE probing, always
     * excluding the current batch id so a replayed in-flight batch
     * still rewrites its own partitions. A long-running crawl otherwise
-    * accretes one file per batch per touched shard forever — and file
+    * accretes one file per batch per shard forever — and file
     * count is exactly what this index's probe latency is sensitive to
     * (round 9: 5.74 → 1.24 s on a 16× cut). Fold cost is an
     * index-sized rewrite every `compactEveryBatches − 2` batches;
@@ -761,7 +766,7 @@ object Runner {
                        docStream: DataFrame, decisionsDir: String,
                        checkpoint: String,
                        numHashes: Int = 64, bands: Int = 16,
-                       shards: Int = 64,
+                       shards: Int = graft.operators.Dedup.maintainedShards,
                        minJ: Double = graft.operators.Dedup.lshMinJ,
                        compactEveryBatches: Int = 64): StreamingQuery = {
     require(compactEveryBatches == 0 || compactEveryBatches >= 3,
@@ -785,7 +790,7 @@ object Runner {
           // hits vs everything accepted in PRIOR batches + intra-batch
           // first-wins pairs (shared builder: Dedup.intakeDupHits)
           val hits = graft.operators.Dedup
-            .intakeDupHits(spark, indexPath, b, numHashes, bands, shards, minJ)
+            .intakeDupHits(spark, indexPath, b, numHashes, bands, minJ)
             .drop("via")
             .persist()
           try {
@@ -839,7 +844,9 @@ object Runner {
     * order), with `dup_of`/`jaccard` when the reason is duplicate.
     * Decisions land by `batch_id`; ONLY accepted docs' banded rows +
     * shingles append to the index ((batch_id, shard) dynamic
-    * overwrite) — both sinks exactly-once under replay. All model
+    * overwrite; one `shard=0` bucket file per batch at the default
+    * `shards`, as [[dedupIntakeQuery]] explains) — both sinks
+    * exactly-once under replay. All model
     * state is broadcast (NB counts, eval grams) or at rest (the LSH
     * index); the batch itself never shuffles wider than its own
     * (doc, gram) pairs. The maintained index folds in-loop past
@@ -849,7 +856,7 @@ object Runner {
                         docStream: DataFrame, decisionsDir: String,
                         checkpoint: String, evalN: Long = 50,
                         numHashes: Int = 64, bands: Int = 16,
-                        shards: Int = 64,
+                        shards: Int = graft.operators.Dedup.maintainedShards,
                         minJ: Double = graft.operators.Dedup.lshMinJ,
                         compactEveryBatches: Int = 64): StreamingQuery = {
     import graft.operators.{Dedup, TextOps}
@@ -903,7 +910,7 @@ object Runner {
             // unpersisted, the intra-batch LSH pass would re-evaluate
             // per consumer every micro-batch
             val hits = Dedup.intakeDupHits(spark, indexPath, b,
-              numHashes, bands, shards, minJ)
+              numHashes, bands, minJ)
               .persist()
             try {
             val cleanIds = stages.filter(col("stage_reason").isNull)

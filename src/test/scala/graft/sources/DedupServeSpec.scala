@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Dedup-at-intake: the d3 LSH machinery split into an at-rest index
-  * (Dedup.writeDedupIndex — banded buckets partitioned (band, shard) +
+  * (Dedup.writeDedupIndex — banded buckets partitioned by shard +
   * range-clustered shingle arrays) and an online probe
   * (dedupServeBatch). Asserts (a) probing the corpus against its own
   * index reproduces EXACTLY the batch d3 pairs, (b) the candidate scan
@@ -52,6 +52,24 @@ class DedupServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(directed.size === 2 * batch.size)
   }
 
+  /** Spark jobs started while `body` runs, counted after draining the
+    * listener bus on both sides so no earlier or late event is miscounted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(counter)
+  }
+
   test("the serve builder's internal shard collect does not sweep the " +
       "armed batch cache") {
     // the round-10 fix (cd0a99d): dedupServeBatch collects the probed
@@ -64,17 +82,28 @@ class DedupServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // withNewRDDExecutionId; see ScratchCache's doc). Pin it: after
     // the builder returns (the internal collect has run), the armed
     // entry must still be cached for the caller's materialization.
-    val idx = tmp("graft-dedup-cidx")
-    Dedup.writeDedupIndex(spark, sf, idx)
-    graft.ScratchCache.drain()
+    // Second input: a one-shard index (the stream-maintained default)
+    // has nothing to prune, so the builder skips the shard-set pass
+    // and runs no job at all; the 64-shard index runs its collect.
     val batch = graft.Tables.documents(spark, sf)
       .filter(col("doc_id") < 20).select(col("doc_id"), col("text"))
-    val rel = Dedup.dedupServeBatch(spark, idx, batch)
-    assert(graft.ScratchCache.pending >= 1,
-      "the armed batch cache was swept by the builder's internal " +
-        "collect — the shard-set collect must run BEFORE arm(), over " +
-        "a plan that sameResult-matches no armed subtree")
-    rel.count() // the caller's action consumes (and then sweeps) it
+    val idx64 = tmp("graft-dedup-cidx")
+    Dedup.writeDedupIndex(spark, sf, idx64)
+    val idx1 = tmp("graft-dedup-cidx1")
+    Dedup.appendDedupIndexBatch(spark, idx1,
+      graft.Tables.documents(spark, sf).select(col("doc_id"), col("text")), 0L)
+    assert(Dedup.readDedupMeta(idx1)._3 === 1, "the maintained default is one shard")
+    Seq(idx64 -> true, idx1 -> false).foreach { case (idx, collects) =>
+      graft.ScratchCache.drain()
+      val (rel, jobs) = jobsDuring(Dedup.dedupServeBatch(spark, idx, batch))
+      if (collects) assert(jobs >= 1, s"$idx: the shard-set collect ran no job")
+      else assert(jobs === 0, s"$idx: a one-shard index must build with no job, ran $jobs")
+      assert(graft.ScratchCache.pending >= 1,
+        "the armed batch cache was swept by the builder's internal " +
+          "collect — the shard-set collect must run BEFORE arm(), over " +
+          "a plan that sameResult-matches no armed subtree")
+      rel.count() // the caller's action consumes (and then sweeps) it
+    }
   }
 
   test("the candidate scan reads only the probed shards' partitions") {
@@ -311,7 +340,8 @@ class DedupServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Seq(1L, 2L, 3L, 4L, 5L, 7L).forall(dec(_) === ((true, -1L))))
     assert(dec(6L) === ((false, 3L)),
       "the post-fold probe must still flag the clone against the FOLDED base")
-    // the folded buckets base holds one file per touched shard — the
+    // the folded buckets base holds one file per touched shard (one
+    // shard=0 file at the maintained one-shard default) — the
     // writeDedupIndex layout the fold restores (round 9: probe latency
     // tracks exactly this file count)
     val baseShards = new java.io.File(s"$idx/buckets/batch_id=-1")

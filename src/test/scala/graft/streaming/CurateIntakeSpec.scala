@@ -13,7 +13,9 @@ import org.scalatest.BeforeAndAfterAll
   * Asserts stream verdicts equal the BATCH gate operators' verdicts
   * composed offline (same docs, same priority), the duplicate branch
   * fires cross-batch against an accepted doc, only accepted docs
-  * enter the index, and a full replay changes nothing. */
+  * enter the index, a full replay changes nothing, each batch writes
+  * one bucket file at the default one-shard layout, and a 64-shard
+  * index decides every doc the same. */
 class CurateIntakeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
@@ -84,25 +86,27 @@ class CurateIntakeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val idx = tmp("graft-ci-idx")
     val out = tmp("graft-ci-out")
-    def runFeed(): Unit = {
+    // `shards` None = the intake's default
+    def runFeed(idx: String, out: String, shards: Option[Int]): Unit = {
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
       val ckpt = tmp("graft-ci-ckpt")
-      val q = Runner.curateIntakeQuery(spark, sf, idx,
-        mem.toDS().toDF("doc_id", "text"), out, ckpt)
+      val docs = mem.toDS().toDF("doc_id", "text")
+      val q = shards.fold(Runner.curateIntakeQuery(spark, sf, idx, docs, out, ckpt))(n =>
+        Runner.curateIntakeQuery(spark, sf, idx, docs, out, ckpt, shards = n))
       try {
         mem.addData(corpusB1.map(id => id -> docsText(id)))
         q.processAllAvailable()
         mem.addData(b2); q.processAllAvailable()
       } finally q.stop()
     }
-    runFeed()
+    runFeed(idx, out, None)
 
-    def decisions() = spark.read.parquet(out)
+    def decisions(out: String) = spark.read.parquet(out)
       .select(col("doc_id"), col("accepted"), col("drop_reason"), col("dup_of"))
       .collect().map(r => r.getLong(0) ->
         (r.getBoolean(1), if (r.isNullAt(2)) null else r.getString(2),
           if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
-    val dec = decisions()
+    val dec = decisions(out)
 
     // every b1 corpus doc: stream verdict == offline-composed verdict
     corpusB1.foreach { id =>
@@ -126,10 +130,31 @@ class CurateIntakeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(indexed === dec.filter(_._2._1).keySet)
 
+    // the default index is one shard: each batch's buckets are ONE
+    // shard=0 directory holding one parquet file (a batch with no
+    // acceptee writes no bucket partition at all)
+    val batchDirs = new java.io.File(s"$idx/buckets").listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
+    assert(batchDirs.map(_.getName).contains("batch_id=0"))
+    batchDirs.foreach { b =>
+      val shardDirs = b.listFiles().toSeq.filter(_.isDirectory)
+      assert(shardDirs.map(_.getName) === Seq("shard=0"),
+        s"${b.getName} holds ${shardDirs.size} shard directories")
+      assert(shardDirs.head.listFiles().count(_.getName.endsWith(".parquet")) === 1,
+        s"${b.getName}/shard=0 must hold one parquet file")
+    }
+
     // replay from a fresh checkpoint: decisions and index unchanged
-    runFeed()
-    assert(decisions() === dec, "replay changed the decisions")
+    runFeed(idx, out, None)
+    assert(decisions(out) === dec, "replay changed the decisions")
     assert(spark.read.parquet(s"$idx/shingles")
       .select("doc_id").collect().map(_.getLong(0)).toSet === indexed)
+
+    // the same feed over a 64-shard index: every doc's accepted flag,
+    // drop_reason and dup_of are unchanged (the shard count is layout
+    // only; banding and verification do not depend on it)
+    val out64 = tmp("graft-ci-out64")
+    runFeed(tmp("graft-ci-idx64"), out64, Some(64))
+    assert(decisions(out64) === dec, "a 64-shard index changed the decisions")
   }
 }

@@ -222,9 +222,11 @@ object DriveFoldAb {
             .createTempDirectory(s"graft-foldab-dck").toString
           val mem = org.apache.spark.sql.execution.streaming.runtime
             .MemoryStream[(Long, String)]
+          // 64 shards, not the one-shard intake default: the scenario
+          // SCALE.md round 15 recorded (2048 → 128 bucket files)
           val q = graft.streaming.Runner.dedupIntakeQuery(spark, idx,
             mem.toDS().toDF("doc_id", "text"), out, ckpt,
-            compactEveryBatches = every)
+            shards = 64, compactEveryBatches = every)
           val t0 = System.nanoTime()
           try docs.grouped(batchSize).foreach { b =>
             mem.addData(b.toSeq); q.processAllAvailable()
