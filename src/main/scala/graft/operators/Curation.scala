@@ -106,18 +106,20 @@ object Curation {
     // shared fanned corpus relation across the text-consuming decision
     // sides — the llmCuratedDocs rationale (one scan + one reused
     // exchange instead of four private single-task re-scans)
+    val docs = Tables.documents(spark, dir)
     val docsF = Tables.documentsFanned(spark, dir)
+    // the eval-gram set is collected first: keepBest arms scratch
+    // relations, and an action run after arming may sweep them
+    val evalSet = TextOps.evalGramSet(docs, evalN)
     val quality = TextOps.filterDecisionOn(docsF)
       .filter(col("keep")).select(col("doc_id"))
     val survivors = Dedup.keepBest(spark, dir)
       .select(col("keep_id").as("doc_id"))
-    val clean = TextOps.decontaminateOn(
-        docsF.filter(col("doc_id") >= evalN),
-        TextOps.evalGrams(spark, dir, evalN))
+    val clean = TextOps.decontaminateOn(docsF.filter(col("doc_id") >= evalN), evalSet)
       .filter(!col("contaminated")).select(col("doc_id"))
     val band = TextOps.quantileFilterOn(docsF, keepFrac)
       .select(col("doc_id"))
-    Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
+    docs.select(col("doc_id"), col("lang"))
       .join(quality, Seq("doc_id"), "left_semi")
       .join(survivors, Seq("doc_id"), "left_semi")
       .join(clean, Seq("doc_id"), "left_semi")
@@ -206,15 +208,18 @@ object Curation {
     // paid once and shared.) keepBest stays on its own path — its pair
     // graph is memoized (d7) and its shingle side is already fanned.
     val docsF = Tables.documentsFanned(spark, dir)
+    // the driver-built verdict tables are collected first: keepBest arms
+    // scratch relations, and an action run after arming may sweep them
+    val docs = Tables.documents(spark, dir)
+    val evalSet = TextOps.evalGramSet(docs, evalN)
+    val nb = TextOps.nbTable(TextOps.nbModelOn(docs))
     val quality = TextOps.filterDecisionOn(docsF)
       .filter(col("keep")).select(col("doc_id"))
     val survivors = Dedup.keepBest(spark, dir)
       .select(col("keep_id").as("doc_id"))
-    val clean = TextOps.decontaminateOn(
-        docsF.filter(col("doc_id") >= evalN),
-        TextOps.evalGrams(spark, dir, evalN))
+    val clean = TextOps.decontaminateOn(docsF.filter(col("doc_id") >= evalN), evalSet)
       .filter(!col("contaminated")).select(col("doc_id"))
-    val classified = TextOps.nbScoreOf(docsF, TextOps.nbModelOn(docsF))
+    val classified = TextOps.nbScoreOf(docsF, nb)
       .filter(col("keep")).select(col("doc_id"))
     docsF
       .join(quality, Seq("doc_id"), "left_semi")

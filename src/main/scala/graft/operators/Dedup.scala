@@ -39,13 +39,24 @@ object Dedup {
     * paths, so their bucket values cannot drift. */
   private[graft] def withShingleHashes(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("toks", tokens(col(textCol)))
+      .withColumn("sh_hashes", shingleHashes(col("toks")))
+      .drop("toks")
+
+  /** [[withShingleHashes]]'s value over a MATERIALIZED token array — the
+    * form a caller that already tokenized (the curate intake's
+    * per-document pass) hashes with. */
+  private[graft] def shingleHashes(toks: Column): Column =
+    sort_array(array_distinct(transform(
       // null text windows to one null shingle: compact it away so the
       // document has no shingles (xxhash64(null) would be a shared 42)
-      .withColumn("shingles",
-        array_distinct(array_compact(tokenWindows(col("toks"), 3, 1))))
-      .withColumn("sh_hashes",
-        sort_array(array_distinct(transform(col("shingles"), s => xxhash64(s)))))
-      .drop("toks", "shingles")
+      array_distinct(array_compact(tokenWindows(toks, 3, 1))),
+      s => xxhash64(s))))
+
+  /** (doc_id, text) → (doc_id, sh_hashes, n_sh): the hashed relation
+    * every LSH core below reads. */
+  private[graft] def hashedOf(docs: DataFrame): DataFrame =
+    withShingleHashes(docs, "text")
+      .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
 
   /** Banded bucket hashes over a minhash-signature column — shared by
     * batch and streaming LSH (same values by construction). Callers must
@@ -185,16 +196,13 @@ object Dedup {
                  numHashes: Int = 64, bands: Int = 16, minJ: Double = lshMinJ): DataFrame =
     minhashLshOn(Tables.documents(spark, dir), numHashes, bands, minJ)
 
-  /** [[minhashLsh]] over ANY (doc_id, text) relation — the batch-local
-    * pass the streaming intake loop runs over each arriving
-    * micro-batch ([[graft.streaming.Runner.dedupIntakeQuery]]). */
+  /** [[minhashLsh]] over ANY (doc_id, text) relation: hashes the
+    * relation, bands it, then calls [[lshPairsOf]] — the core the
+    * streaming intake loops run over each micro-batch's persisted
+    * hashed relation ([[graft.streaming.Runner.dedupIntakeQuery]]). */
   def minhashLshOn(documents: DataFrame,
                    numHashes: Int = 64, bands: Int = 16,
                    minJ: Double = lshMinJ): DataFrame = {
-    // integer division would silently drop trailing hashes (64/10 → 6×10
-    // used, 4 ignored), changing the effective LSH threshold — fail fast
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
     // hash each shingle to a long ONCE (withShingleHashes; sorted so
     // verification can merge-count — minhash minima are
     // order-insensitive); the numHashes permutations then re-hash
@@ -202,27 +210,31 @@ object Dedup {
     // measured ~2 s → sub-second at sf0.1), all minima in ONE fused
     // codegen loop (functions.MinHashSigs).
     val docs = ScratchCache.arm( // feeds the banded index and both verify joins (see d2)
-      withShingleHashes(documents, "text")
-        .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
+      hashedOf(documents)
         // a shingle-less document shares nothing: its Jaccard is 0/0
         .filter(col("n_sh") > 0))
     // persist the banded index (plain (doc, band, bucket) rows): it sits
     // on both sides of the bucket self-join, which would otherwise run
     // the minhash projection twice (~2× at sf0.1).
-    val banded = ScratchCache.arm(docs
-      .select(col("doc_id"),
-        graft.functions.MinHashSigs.minhash_sigs(
-          col("sh_hashes"), lit(numHashes)).as("sigs"))
-      .select(col("doc_id"),
-        posexplode(array(bandHashCols(col("sigs"), numHashes, bands): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"))
+    lshPairsOf(docs, docs, ScratchCache.arm(bandsOf(docs, numHashes, bands)), minJ)
+  }
+
+  /** [[minhashLshOn]]'s core over an already hashed relation
+    * (doc_id, sh_hashes, n_sh > 0) and its bands (doc_id, band, bucket):
+    * the bucket self-join, then exact verification. `partners` (a
+    * subset of `docs`) is the side a pair's LOWER id must come from —
+    * `docs` itself for plain LSH; the curate intake passes its
+    * stage-clean docs, so an intra-batch hit counts only against a
+    * partner that survived the other stages, with no extra join. */
+  private[graft] def lshPairsOf(partners: DataFrame, docs: DataFrame,
+                                banded: DataFrame, minJ: Double): DataFrame = {
     val l = banded.select(col("band"), col("bucket"), col("doc_id").as("id_a"))
     val r = banded.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
     val cand = l.join(r, Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
     cand
-      .join(docs.select(col("doc_id").as("id_a"), col("sh_hashes").as("sh_a"),
+      .join(partners.select(col("doc_id").as("id_a"), col("sh_hashes").as("sh_a"),
         col("n_sh").as("n_a")), "id_a")
       .join(docs.select(col("doc_id").as("id_b"), col("sh_hashes").as("sh_b"),
         col("n_sh").as("n_b")), "id_b")
@@ -923,11 +935,20 @@ object Dedup {
     * its mod-`shards` residue makes each query batch's candidate read
     * a static partition filter — the ANN index's probed-cells trick
     * applied to LSH buckets. */
-  private def bandedOf(docs: DataFrame, numHashes: Int, bands: Int,
-                       shards: Int): DataFrame = {
+  private[graft] def bandedOf(docs: DataFrame, numHashes: Int, bands: Int,
+                              shards: Int): DataFrame = {
+    require(shards >= 1, s"shards must be >= 1, got $shards")
+    bandsOf(docs, numHashes, bands)
+      .withColumn("shard", pmod(col("bucket"), lit(shards.toLong)).cast("int"))
+  }
+
+  /** (doc_id, sh_hashes) → (doc_id, band, bucket): one minhash
+    * signature per doc, cut into `bands` banded bucket hashes. */
+  private def bandsOf(docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    // integer division would silently drop trailing hashes (64/10 → 6×10
+    // used, 4 ignored), changing the effective LSH threshold — fail fast
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    require(shards >= 1, s"shards must be >= 1, got $shards")
     docs
       .select(col("doc_id"),
         graft.functions.MinHashSigs.minhash_sigs(
@@ -935,7 +956,6 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(array(bandHashCols(col("sigs"), numHashes, bands): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .withColumn("shard", pmod(col("bucket"), lit(shards.toLong)).cast("int"))
   }
 
   /** The `shards` default of a STREAM-MAINTAINED dedup index
@@ -977,9 +997,7 @@ object Dedup {
     writeDedupMeta(out, numHashes, bands, shards)
     // explicit persist, not arm(): TWO write actions read this relation
     // (arm would sweep after the first and recompute for the second)
-    val docs = withShingleHashes(Tables.documents(spark, dir), "text")
-      .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
-      .persist()
+    val docs = hashedOf(Tables.documents(spark, dir)).persist()
     try {
       // one shuffle so each (band, shard) partition lands as ONE file —
       // without it every map task writes a sliver into every partition
@@ -1106,7 +1124,11 @@ object Dedup {
     * repeating them could silently repeat them WRONG: a mismatched
     * `shards` modulus makes the partition filter drop true candidates,
     * and mismatched banding probes buckets the index never wrote —
-    * both silent recall loss, neither an error. */
+    * both silent recall loss, neither an error.
+    *
+    * Hashes the batch, bands it with those dials, then calls
+    * [[serveHashedOf]] — the probe the intake loops run over their
+    * persisted hashed relation ([[intakeHitsOf]]). */
   def dedupServeBatch(spark: SparkSession, indexPath: String,
                       batch: DataFrame,
                       minJ: Double = lshMinJ): DataFrame = {
@@ -1129,22 +1151,43 @@ object Dedup {
     // the shard set; the two expensive consumers share the cache.
     // Skipped for a one-shard index (maintainedShards): its single
     // partition is the whole relation, so there is nothing to prune.
-    val probedShards =
-      if (shards == 1) None
-      else Some(bandedOf(
-        withShingleHashes(batch, "text").select(col("doc_id"), col("sh_hashes")),
-        numHashes, bands, shards)
-        .select(col("shard")).distinct().collect().map(_.getInt(0)))
+    val probedShards = probedShardsOf(batch, numHashes, bands, shards)
     val q = ScratchCache.arm( // feeds probes AND the verify join
-      withShingleHashes(batch, "text")
-        .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
+      hashedOf(batch)
         // a shingle-less probe shares nothing: its Jaccard is 0/0
         .filter(col("n_sh") > 0))
-    val probes = bandedOf(q, numHashes, bands, shards)
-      .select(col("doc_id").as("query_id"), col("band"), col("bucket"))
+    serveHashedOf(spark, indexPath, q, bandedOf(q, numHashes, bands, shards),
+      probedShards, minJ)
+  }
+
+  /** The shard set a probe batch touches, over the 2-column plan that
+    * no armed relation's plan matches (see [[dedupServeBatch]]); None
+    * for a one-shard index. */
+  private def probedShardsOf(batch: DataFrame, numHashes: Int, bands: Int,
+                             shards: Int): Option[Seq[Int]] =
+    shardSetOf(bandedOf(
+      withShingleHashes(batch, "text").select(col("doc_id"), col("sh_hashes")),
+      numHashes, bands, shards), shards)
+
+  /** The distinct `shard` values of a banded relation, collected; None
+    * when `shards` is 1 (one partition leaves nothing to prune). An
+    * armed `banded` would be swept by this collect: pass a persisted
+    * relation or a plan no armed relation matches. */
+  private[graft] def shardSetOf(banded: DataFrame, shards: Int): Option[Seq[Int]] =
+    if (shards == 1) None
+    else Some(banded.select(col("shard")).distinct().collect().map(_.getInt(0)).toSeq)
+
+  /** [[dedupServeBatch]]'s core over an already hashed probe batch
+    * (doc_id, sh_hashes, n_sh > 0) and its bands (doc_id, band, bucket),
+    * banded with the index's dials. `probedShards` is the static
+    * partition filter (None: read every shard). */
+  private def serveHashedOf(spark: SparkSession, indexPath: String,
+                            q: DataFrame, banded: DataFrame,
+                            probedShards: Option[Seq[Int]],
+                            minJ: Double): DataFrame = {
+    val probes = banded.select(col("doc_id").as("query_id"), col("band"), col("bucket"))
     val buckets = graft.sources.Layout.readParquet(spark, s"$indexPath/buckets")
-    val idx = probedShards.fold(buckets)(s =>
-      buckets.filter(col("shard").isin(s.toSeq: _*)))
+    val idx = probedShards.fold(buckets)(s => buckets.filter(col("shard").isin(s: _*)))
     val cand = idx.join(broadcast(probes), Seq("band", "bucket"))
       // a re-ingested identical id must not match itself
       .filter(col("doc_id") =!= col("query_id"))
@@ -1174,9 +1217,7 @@ object Dedup {
                        newDocs: DataFrame): Unit = {
     migrateLegacyMeta(indexPath) // append mutates anyway — migrate here
     val (numHashes, bands, shards) = readDedupMeta(indexPath)
-    val docs = withShingleHashes(newDocs, "text")
-      .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
-      .persist()
+    val docs = hashedOf(newDocs).persist()
     try {
       bandedOf(docs, numHashes, bands, shards)
         .repartition(col("shard")) // one file per touched partition
@@ -1198,39 +1239,59 @@ object Dedup {
     * batch's buckets are ONE file under `batch_id=B/shard=0`. A
     * maintained index is a directory the stream ALONE writes
     * (partition-discovery depth must stay uniform, so a
-    * [[writeDedupIndex]] layout cannot be mixed in). */
+    * [[writeDedupIndex]] layout cannot be mixed in). Checks the dials
+    * ([[ensureMaintainedDials]]), hashes `newDocs` once, then writes
+    * through [[appendHashedBatch]]. */
   def appendDedupIndexBatch(spark: SparkSession, indexPath: String,
                             newDocs: DataFrame, batchId: Long,
                             numHashes: Int = 64, bands: Int = 16,
                             shards: Int = maintainedShards): Unit = {
-    // first maintained batch CREATES the meta; later batches (and any
-    // replay) must match it — a restarted stream with different dials
-    // would otherwise silently corrupt the index's banding
+    ensureMaintainedDials(indexPath, numHashes, bands, shards)
+    val docs = hashedOf(newDocs).persist()
+    try appendHashedBatch(spark, indexPath, docs,
+      bandedOf(docs.filter(col("n_sh") > 0), numHashes, bands, shards), batchId)
+    finally docs.unpersist(blocking = false)
+  }
+
+  /** First maintained batch CREATES the index's `_meta.json`; every
+    * later batch (and any replay) must match it — a restarted stream
+    * with different dials would otherwise silently corrupt the index's
+    * banding. The intake loops call this at the head of each
+    * micro-batch, before the fold and before any write, so a refused
+    * restart leaves no decisions behind. */
+  private[graft] def ensureMaintainedDials(indexPath: String, numHashes: Int,
+                                           bands: Int, shards: Int): Unit =
     if (dedupMetaExists(indexPath)) {
       val meta = readDedupMeta(indexPath)
       require(meta == ((numHashes, bands, shards)),
         s"maintained-index dial mismatch: index has $meta, stream passed " +
           s"(${(numHashes, bands, shards)})")
     } else writeDedupMeta(indexPath, numHashes, bands, shards)
-    val docs = withShingleHashes(newDocs, "text")
-      .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
-      .persist()
-    try {
-      bandedOf(docs, numHashes, bands, shards)
-        .repartition(col("shard")) // one file per touched partition
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "shard")
-        .parquet(s"$indexPath/buckets")
-      docs.repartitionByRange(col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(s"$indexPath/shingles")
-    } finally docs.unpersist(blocking = false)
+
+  /** [[appendDedupIndexBatch]]'s core over an already hashed relation
+    * (doc_id, sh_hashes, n_sh) and its bands (doc_id, band, bucket,
+    * shard), banded with the index's dials: buckets under
+    * (batch_id, shard), shingles under batch_id, both by dynamic
+    * overwrite. A shingle-less doc has no minima: it enters the
+    * shingles relation but no bucket (no probe can reach it). */
+  private[graft] def appendHashedBatch(spark: SparkSession, indexPath: String,
+                                       hashed: DataFrame, banded: DataFrame,
+                                       batchId: Long): Unit = {
+    banded.select(col("doc_id"), col("band"), col("bucket"), col("shard"))
+      .repartition(col("shard")) // one file per touched partition
+      .withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id", "shard")
+      .parquet(s"$indexPath/buckets")
+    hashed.select(col("doc_id"), col("sh_hashes"), col("n_sh"))
+      .repartitionByRange(col("doc_id"))
+      .sortWithinPartitions(col("doc_id"))
+      .withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(s"$indexPath/shingles")
   }
 
   /** In-loop LSM compaction for the MAINTAINED dedup index — the
@@ -1279,28 +1340,68 @@ object Dedup {
     ()
   }
 
-  /** Per-batch duplicate hits for the streaming intake loops
-    * ([[graft.streaming.Runner.dedupIntakeQuery]] /
-    * `curateIntakeQuery`): hits against the maintained index (when it
-    * exists yet — the first batch of a fresh intake has none) UNION
-    * intra-batch LSH pairs flagged later-id-against-earlier-id
-    * (first-wins). `via` says which path found the hit ("index" /
-    * "intra") so callers can treat them differently (the curation
-    * intake only honors intra hits whose earlier partner survived its
-    * other stages). */
+  /** Per-batch duplicate hits for a stream-maintained index: hits
+    * against the index (when it exists yet — the first batch of a fresh
+    * intake has none) UNION intra-batch LSH pairs flagged
+    * later-id-against-earlier-id (first-wins). `via` says which path
+    * found the hit ("index" / "intra"). The dials must be the index's
+    * own: a maintained index's `numHashes`/`bands` are refused here
+    * when they differ. Hashes the batch once, then calls
+    * [[intakeHitsOf]], the core the intake loops call on their
+    * persisted per-document relation. */
   def intakeDupHits(spark: SparkSession, indexPath: String, batch: DataFrame,
                     numHashes: Int = 64, bands: Int = 16,
                     minJ: Double = lshMinJ): DataFrame = {
+    val shards =
+      if (!hasBuckets(indexPath)) maintainedShards
+      else {
+        val (nh, b, s) = readDedupMeta(indexPath)
+        require((nh, b) == ((numHashes, bands)),
+          s"maintained-index dial mismatch: index has ($nh, $b), caller " +
+            s"passed ($numHashes, $bands)")
+        s
+      }
+    val probedShards = probedShardsOf(batch, numHashes, bands, shards)
+    val hashed = ScratchCache.arm(hashedOf(batch).filter(col("n_sh") > 0))
+    intakeHitsOf(spark, indexPath, hashed,
+      ScratchCache.arm(bandedOf(hashed, numHashes, bands, shards)), hashed,
+      probedShards, minJ)
+  }
+
+  /** Whether a maintained index holds a bucket file yet. A first
+    * micro-batch that accepts nothing leaves `buckets/` as an empty
+    * directory, which has no schema to read: it is no index yet. */
+  private def hasBuckets(indexPath: String): Boolean = {
+    val root = java.nio.file.Paths.get(s"$indexPath/buckets")
+    java.nio.file.Files.exists(root) && {
+      val files = java.nio.file.Files.walk(root)
+      try files.anyMatch(_.getFileName.toString.endsWith(".parquet"))
+      finally files.close()
+    }
+  }
+
+  /** [[intakeDupHits]]'s core over an already hashed batch
+    * (doc_id, sh_hashes, n_sh > 0) and its bands (doc_id, band, bucket,
+    * shard) under the index's dials: the index probe and the intra-batch
+    * LSH both read these two relations, so the batch is hashed and
+    * banded once. An intra pair counts only when its earlier doc is in
+    * `partners` (see [[lshPairsOf]]). `probedShards` ([[shardSetOf]]) is
+    * evaluated only when the index exists. */
+  private[graft] def intakeHitsOf(spark: SparkSession, indexPath: String,
+                                  hashed: DataFrame, banded: DataFrame,
+                                  partners: DataFrame,
+                                  probedShards: => Option[Seq[Int]],
+                                  minJ: Double): DataFrame = {
     val indexHits =
-      if (new java.io.File(s"$indexPath/buckets").exists())
-        dedupServeBatch(spark, indexPath, batch, minJ)
+      if (hasBuckets(indexPath))
+        serveHashedOf(spark, indexPath, hashed, banded, probedShards, minJ)
           .withColumn("via", lit("index"))
       else {
         val sq = spark; import sq.implicits._
         Seq.empty[(Long, Long, Double, String)]
           .toDF("query_id", "match_id", "jaccard", "via")
       }
-    val intraHits = minhashLshOn(batch, numHashes, bands, minJ)
+    val intraHits = lshPairsOf(partners, hashed, banded, minJ)
       .select(col("id_b").as("query_id"), col("id_a").as("match_id"),
         col("jaccard"))
       .withColumn("via", lit("intra"))

@@ -238,11 +238,41 @@ object TextOps {
     * are the aggregation shapes; only the decision fuses. At 100 TB
     * the decision stage becomes a map-only scan (guide §1.2: remove
     * shuffles the computation never needed). */
-  def filterDecisionOn(docs: DataFrame): DataFrame = {
-    // fold over the sorted array: (previous token, current run length,
-    // best run length); equal neighbors extend the run, others reset it
-    def maxRun(sortedToks: Column): Column = aggregate(
-      sortedToks,
+  def filterDecisionOn(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("toks", tokens("text"))
+      .select(col("doc_id"), nTokensOf(col("toks")).as("n_tokens"),
+        maxTokFracOf(col("toks")).as("max_tok_frac"),
+        stopwordRatio(col("toks")).as("stopword_ratio"))
+      .select(col("doc_id"), col("n_tokens"), col("max_tok_frac"),
+        col("stopword_ratio"),
+        ruleReason(col("n_tokens"), col("max_tok_frac"), col("stopword_ratio"))
+          .as("drop_reason"))
+      .withColumn("keep", col("drop_reason").isNull)
+
+  /** t10's verdict over a MATERIALIZED token array (a named column:
+    * every feature reads it): the first failing rule's name, or null to
+    * keep. The rules are [[filterDecisionOn]]'s, so the streaming
+    * intake's per-document pass and the batch gate query cannot drift. */
+  def filterReason(toks: Column): Column =
+    ruleReason(nTokensOf(toks), maxTokFracOf(toks), stopwordRatio(toks))
+
+  private def ruleReason(nTokens: Column, maxTokFrac: Column,
+                         stopwordRatio: Column): Column =
+    when(nTokens < 15, "too_short")
+      .when(maxTokFrac > 0.15, "repetitive")
+      .when(stopwordRatio > 0.15, "stopword_heavy")
+
+  // null text has no token array and size(NULL) is NULL, which no rule
+  // would fire on: count it as 0 tokens, so it drops as too_short
+  // instead of passing as keep
+  private def nTokensOf(toks: Column): Column = coalesce(size(toks), lit(0))
+
+  /** Repetition's max-token share: the longest equal-run in the SORTED
+    * token array, folded as (previous token, current run, best run). */
+  private def maxTokFracOf(toks: Column): Column = {
+    val best = aggregate(
+      array_sort(toks),
       struct(lit(null).cast("string").as("prev"), lit(0L).as("run"),
         lit(0L).as("best")),
       (acc, x) => {
@@ -252,23 +282,7 @@ object TextOps {
           greatest(acc.getField("best"), run).as("best"))
       },
       acc => acc.getField("best"))
-    docs
-      .withColumn("toks", tokens("text"))
-      .select(col("doc_id"),
-        // null text has no token array and size(NULL) is NULL, which
-        // no rule would fire on: count it as 0 tokens, so it drops as
-        // too_short instead of passing as keep
-        coalesce(size(col("toks")), lit(0)).as("n_tokens"),
-        (maxRun(array_sort(col("toks")))
-          / size(col("toks")).cast("double")).as("max_tok_frac"),
-        stopwordRatio(col("toks")).as("stopword_ratio"))
-      .select(col("doc_id"), col("n_tokens"), col("max_tok_frac"),
-        col("stopword_ratio"),
-        when(col("n_tokens") < 15, "too_short")
-          .when(col("max_tok_frac") > 0.15, "repetitive")
-          .when(col("stopword_ratio") > 0.15, "stopword_heavy")
-          .as("drop_reason"))
-      .withColumn("keep", col("drop_reason").isNull)
+    best / size(toks).cast("double")
   }
 
   /** t11: TF-IDF top terms per document — the classic corpus-statistic
@@ -394,44 +408,37 @@ object TextOps {
     * over the seed-union vocabulary (tokens unseen in either seed get
     * the constant smoothed floor). `keep` = rounded score > 0.
     *
-    * Scale shape (the t19/t22 pattern): the class-conditional counts
-    * are ONE vocab-bounded aggregate over the seed docs only; the
-    * model and its totals join back BROADCAST; the corpus shuffles
-    * only its distinct (doc, token) pairs. At 100 TB the seeds are a
-    * fixed sample and only the narrow scoring join touches every
-    * document — the exact deployment shape of the fastText filter,
-    * with the model as a broadcast relation instead of a binary blob.
+    * Scale shape: the class-conditional counts are ONE vocab-bounded
+    * aggregate over the seed docs only, collected to the driver as a
+    * per-token log-odds table ([[nbTable]]); scoring is then a per-row
+    * lookup over each document's token array — no join, no shuffle on
+    * the corpus side. At 100 TB the seeds are a fixed sample and only
+    * the narrow scoring projection touches every document — the exact
+    * deployment shape of the fastText filter, with the model as a
+    * broadcast table instead of a binary blob.
     *
     * Float parity: both sides sum identical ln-ratio terms per doc and
-    * round to 6 dp (the t19 precedent); the keep flag compares the
-    * ROUNDED score so the boolean cannot straddle an ulp. The DuckDB
-    * oracle hard-codes the default sources; non-default invocations
-    * are NOT gate-checked. */
+    * round half-up to 6 dp (the t19 precedent); the keep flag compares
+    * the ROUNDED score so the boolean cannot straddle an ulp. The
+    * DuckDB oracle hard-codes the default sources; non-default
+    * invocations are NOT gate-checked. */
   def nbQuality(spark: SparkSession, dir: String,
                 posSource: String = "src0",
-                negSource: String = "src1"): DataFrame = {
-    // ONE fanned corpus relation feeds both the model aggregate and the
-    // scoring side (token explodes: map-heavy) — identical subtrees, so
-    // the scan + fan-out exchange is computed once (ReusedExchange)
-    val docsF = Tables.documentsFanned(spark, dir)
-    nbScoreOf(docsF, nbModelOn(docsF, posSource, negSource))
-  }
+                negSource: String = "src1"): DataFrame =
+    nbScoreOf(Tables.documentsFanned(spark, dir),
+      nbTable(nbModel(spark, dir, posSource, negSource)))
 
   /** [[nbQuality]]'s trained model: per-token seed-class counts
     * (tok, cp, cn) — ONE vocab-bounded aggregate over the seed docs
-    * only (the corpus is not touched). Train once, serve many: the
-    * batch gate query derives it inline; the streaming scorer
-    * ([[graft.streaming.Runner.nbScoreQuery]]) persists it across
-    * micro-batches — the fastText deployment shape with the model as
-    * a broadcast relation instead of a binary blob. */
+    * only (the corpus is not touched). Train once, serve many: scorers
+    * collect it into an [[NbTable]]. */
   def nbModel(spark: SparkSession, dir: String,
               posSource: String = "src0",
               negSource: String = "src1"): DataFrame =
     nbModelOn(Tables.documents(spark, dir), posSource, negSource)
 
   /** [[nbModel]] over ANY (source, text) relation — lets composers
-    * (t29, q34) train on the same shared corpus relation the scorer
-    * reads instead of a private re-scan. */
+    * (q34) train on a corpus relation they already hold. */
   def nbModelOn(docs: DataFrame,
                 posSource: String = "src0",
                 negSource: String = "src1"): DataFrame = {
@@ -444,32 +451,66 @@ object TextOps {
         sum(when(col("source") === negSource, 1L).otherwise(0L)).as("cn"))
   }
 
-  /** Score ANY (doc_id, text) relation against a trained [[nbModel]] —
-    * the serve half: stateless per-doc arithmetic, the model and its
-    * one-row totals broadcast, the input shuffling only its distinct
-    * (doc, token) pairs. Shared by the batch gate query and the
-    * streaming scorer so their values cannot drift. */
-  def nbScoreOf(docs: DataFrame, model: DataFrame): DataFrame = {
-    val tf = ScratchCache.arm(
-      docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("n")))
-    // totals + vocab as a broadcast ONE-ROW relation (the t19 pattern);
-    // long arithmetic, cast to double only inside the ratio
-    val stats = model.agg(sum(col("cp")).as("tot_p"), sum(col("cn")).as("tot_n"),
-      count(lit(1)).as("vocab"))
-    val scored = tf.join(broadcast(model), Seq("tok"), "left")
-      .crossJoin(broadcast(stats))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("n")).as("n_tokens"),
-        round(
-          sum(col("n") * (
-            log((coalesce(col("cp"), lit(0L)) + lit(1)) /
-              (col("tot_p") + col("vocab")).cast("double")) -
-              log((coalesce(col("cn"), lit(0L)) + lit(1)) /
-                (col("tot_n") + col("vocab")).cast("double")))) / sum(col("n")),
-          6).as("avg_logodds"))
-    scored.withColumn("keep", col("avg_logodds") > 0)
+  /** A trained [[nbModel]] as a driver-built lookup table: each seed
+    * token's smoothed log-odds
+    * ln((cp+1)/(tot_p+vocab)) − ln((cn+1)/(tot_n+vocab)), and the
+    * constant an unseen token scores (cp = cn = 0). The model is
+    * vocab-bounded and was broadcast whole before, so collecting it
+    * adds no size assumption. Broadcast once: every plan that scores
+    * with the table ships only the handle, and the blocks are released
+    * when the table is garbage-collected. */
+  final class NbTable private[TextOps] (
+      logOdds: org.apache.spark.broadcast.Broadcast[Map[String, Double]],
+      unseen: Double) {
+    private val sumLogOdds = {
+      val (bc, floor) = (logOdds, unseen) // the closure must not capture `this`
+      udf((toks: Seq[String]) =>
+        if (toks == null) null
+        else {
+          val table = bc.value
+          var s = 0.0
+          toks.foreach(t => s += table.getOrElse(t, floor))
+          java.lang.Double.valueOf(s)
+        })
+    }
+
+    /** Mean per-token log-odds of a token array, rounded half-up to
+      * 6 dp; null for a null array. */
+    def avgLogOdds(toks: Column): Column =
+      round(sumLogOdds(toks) / size(toks).cast("double"), 6)
+
+    /** t29's verdict: the rounded score is positive. */
+    def keep(toks: Column): Column = avgLogOdds(toks) > 0
   }
+
+  /** Collect `model` (tok, cp, cn) into an [[NbTable]]. The terms are
+    * the ones the relational scorer summed: `StrictMath.log` is Spark's
+    * `log`, and the long counts divide as doubles. */
+  def nbTable(model: DataFrame): NbTable = {
+    val rows = model.select(col("tok"), col("cp"), col("cn")).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val denP = (rows.map(_._2).sum + rows.length).toDouble
+    val denN = (rows.map(_._3).sum + rows.length).toDouble
+    def logOdds(cp: Long, cn: Long): Double =
+      StrictMath.log((cp + 1).toDouble / denP) - StrictMath.log((cn + 1).toDouble / denN)
+    new NbTable(
+      model.sparkSession.sparkContext.broadcast(
+        rows.map { case (t, cp, cn) => t -> logOdds(cp, cn) }.toMap),
+      logOdds(0L, 0L))
+  }
+
+  /** Score ANY (doc_id, text) relation against an [[NbTable]] — the
+    * serve half: one per-row projection over the token array, no join
+    * and no shuffle. Shared by t29, q34, the streaming scorer and the
+    * curate intake, so their values cannot drift. Output
+    * (doc_id, n_tokens, avg_logodds, keep); a null text has no tokens
+    * and no row. */
+  def nbScoreOf(docs: DataFrame, table: NbTable): DataFrame =
+    docs.select(col("doc_id"), tokens("text").as("toks"))
+      .filter(col("toks").isNotNull)
+      .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"),
+        table.avgLogOdds(col("toks")).as("avg_logodds"))
+      .withColumn("keep", col("avg_logodds") > 0)
 
   /** t30: DSIR importance resampling — Data Selection with Importance
     * Resampling (Xie et al. 2023): select pretraining documents whose
@@ -664,42 +705,57 @@ object TextOps {
     * evaluation set (here: doc_id < `evalN` stands in for the benchmark
     * suite). Per surviving doc: how many of its distinct k-grams appear
     * anywhere in the eval set, and the keep/flag verdict. Scale shape:
-    * the eval-gram dictionary is tiny relative to the corpus —
-    * broadcast semi/inner join against it, so the 100 TB train side is
-    * one narrow explode + one map-side join + one per-doc count; no
-    * all-pairs, no corpus shuffle on gram. */
+    * the eval-gram dictionary is tiny relative to the corpus — it is
+    * collected to the driver as a set ([[evalGramSet]]) and every train
+    * doc is one per-row lookup over its own grams; no all-pairs, no
+    * join, no corpus shuffle on gram. */
   def decontaminate(spark: SparkSession, dir: String, evalN: Long = 50,
-                    k: Int = 5): DataFrame =
-    decontaminateOn(
-      Tables.documents(spark, dir).filter(col("doc_id") >= evalN),
-      evalGrams(spark, dir, evalN, k), k)
+                    k: Int = 5): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    decontaminateOn(docs.filter(col("doc_id") >= evalN), evalGramSet(docs, evalN, k))
+  }
+
+  /** A k-gram set built on the driver and broadcast once — the
+    * decontamination lookup table ([[evalGramSet]]). The eval-gram
+    * dictionary was broadcast whole before, so collecting it adds no
+    * size assumption; its blocks are released when the set is
+    * garbage-collected. */
+  final class GramSet private[TextOps] (
+      k: Int, grams: org.apache.spark.broadcast.Broadcast[Set[String]]) {
+    private val countIn = {
+      val bc = grams // the closure must not capture `this`
+      udf((gs: Seq[String]) => if (gs == null) 0L else gs.count(bc.value.contains).toLong)
+    }
+
+    /** How many of a MATERIALIZED token array's distinct k-grams are in
+      * the set (the windows are [[docGramsOn]]'s). */
+    def matched(toks: Column): Column =
+      countIn(array_distinct(tokenWindows(toks, k, 1)))
+  }
 
   /** The held-out eval set's distinct k-gram dictionary — the
-    * decontamination REFERENCE, built once and reused across batches
-    * by the streaming intake (persist it caller-side; tiny vs any
-    * corpus). */
-  def evalGrams(spark: SparkSession, dir: String, evalN: Long = 50,
-                k: Int = 5): DataFrame =
-    docGrams(spark, dir, k).filter(col("doc_id") < evalN)
-      .select(col("gram")).distinct()
+    * decontamination REFERENCE (tiny vs any corpus) — as a [[GramSet]]:
+    * the eval docs (doc_id < `evalN` of the `documents` relation
+    * `docs`) have their distinct grams collected in one map-only pass,
+    * deduplicated across docs on the driver. */
+  def evalGramSet(docs: DataFrame, evalN: Long = 50, k: Int = 5): GramSet =
+    new GramSet(k, docs.sparkSession.sparkContext.broadcast(
+      docs.filter(col("doc_id") < evalN)
+        .select(tokens("text").as("toks"))
+        .select(array_distinct(tokenWindows(col("toks"), k, 1)))
+        .collect().iterator.flatMap(_.getSeq[String](0))
+        // null text windows to one null gram, which matches nothing
+        .filter(_ != null).toSet))
 
-  /** [[decontaminate]] over ANY (doc_id, text) relation against a
-    * caller-supplied eval-gram dictionary — ONE implementation with
-    * the batch gate query (which passes the ≥ evalN corpus and
-    * [[evalGrams]]), reused per micro-batch by the streaming intake so
-    * stream and batch verdicts cannot drift. The eval side broadcasts;
-    * the input side is one narrow explode + map-side semi-join. */
-  def decontaminateOn(docs: DataFrame, evalGramDict: DataFrame,
-                      k: Int = 5): DataFrame = {
-    val matched = docGramsOn(docs, k)
-      .join(broadcast(evalGramDict), Seq("gram"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_matched"))
-    docs.select(col("doc_id"))
-      .join(matched, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_matched"), lit(0L)).as("n_matched"))
+  /** [[decontaminate]] over ANY (doc_id, text) relation against an
+    * eval-gram set — ONE per-row implementation for the batch gate
+    * query (which passes the ≥ evalN corpus), q34/q35 and the
+    * streaming curate intake, so their verdicts cannot drift. Output
+    * (doc_id, n_matched, contaminated), one row per input doc. */
+  def decontaminateOn(docs: DataFrame, evalGrams: GramSet): DataFrame =
+    docs.select(col("doc_id"), tokens("text").as("toks"))
+      .select(col("doc_id"), evalGrams.matched(col("toks")).as("n_matched"))
       .withColumn("contaminated", col("n_matched") > 0)
-  }
 
   /** t17: Bloom-pruned decontamination — [[decontaminate]]'s 100 TB
     * shape when the eval-gram dictionary outgrows a comfortable

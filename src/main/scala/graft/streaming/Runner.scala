@@ -674,21 +674,23 @@ object Runner {
     * answers land partitioned by `batch_id` under write-scoped dynamic
     * partition overwrite (the K5 idempotent-sink recipe: a replayed
     * batch rewrites its own partition). No cross-batch state — every
-    * doc is scored whole within its batch. The persisted model is
-    * released when the caller stops the query and the session's cache
-    * is cleared (vocab-bounded — tiny next to any corpus). */
+    * doc is scored whole within its batch. The model's driver-built
+    * log-odds table ([[graft.operators.TextOps.NbTable]]) is built in
+    * the first micro-batch and lives as long as the query's closure
+    * (vocab-bounded — tiny next to any corpus). */
   def nbScoreQuery(spark: SparkSession, dir: String, docStream: DataFrame,
                    outDir: String, checkpoint: String,
                    posSource: String = "src0",
                    negSource: String = "src1"): StreamingQuery = {
-    val model = graft.operators.TextOps.nbModel(spark, dir, posSource, negSource)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import graft.operators.TextOps
+    // built in the first micro-batch, held by this query's closure
+    lazy val table = TextOps.nbTable(TextOps.nbModel(spark, dir, posSource, negSource))
     docStream
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextOps.nbScoreOf(batch, model)
+        TextOps.nbScoreOf(batch, table)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -725,13 +727,19 @@ object Runner {
 
   /** The FULL streaming intake-dedup loop on a STREAM-MAINTAINED
     * index: per micro-batch, (1) probe the arriving documents against
-    * everything accepted so far ([[graft.operators.Dedup
-    * .dedupServeBatch]]), (2) write each doc's keep/drop DECISION
+    * everything accepted so far (the [[graft.operators.Dedup
+    * .dedupServeBatch]] probe), (2) write each doc's keep/drop DECISION
     * (dup docs carry their best indexed match), (3) append ONLY the
     * accepted documents' banded rows + shingles into the index — so
-    * later batches dedup against them. Exactly-once on BOTH sinks by
-    * the annIndexMaintainQuery recipe: decisions partition by
-    * `batch_id`; index rows land under (batch_id, shard) /
+    * later batches dedup against them. Each batch is hashed and banded
+    * ONCE, and the probe, the intra-batch LSH, the decisions and the
+    * append read those two persisted relations (the
+    * [[maintainedIntakeQuery]] body, shared with [[curateIntakeQuery]],
+    * which also says why the accepted set is read back from the
+    * written decisions). A restart whose dials differ from the index's
+    * `_meta.json` is refused before anything is written. Exactly-once
+    * on BOTH sinks by the annIndexMaintainQuery recipe: decisions
+    * partition by `batch_id`; index rows land under (batch_id, shard) /
     * (batch_id) dynamic partition overwrite, so a replayed batch
     * rewrites its own partitions instead of appending duplicates. At
     * the default `shards` ([[graft.operators.Dedup.maintainedShards]],
@@ -768,70 +776,25 @@ object Runner {
                        numHashes: Int = 64, bands: Int = 16,
                        shards: Int = graft.operators.Dedup.maintainedShards,
                        minJ: Double = graft.operators.Dedup.lshMinJ,
-                       compactEveryBatches: Int = 64): StreamingQuery = {
-    require(compactEveryBatches == 0 || compactEveryBatches >= 3,
-      s"compactEveryBatches ($compactEveryBatches) must be 0 (off) or >= 3: " +
-        "the fold leaves base + current = 2 partitions, so a threshold of " +
-        "2 would rewrite the whole index on every batch")
-    docStream
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup.recoverDedupIndexFolds(spark, indexPath)
-        if (compactEveryBatches > 0 &&
-            graft.sources.BatchFold
-              .batchDirCount(spark, s"$indexPath/buckets")
-              >= compactEveryBatches)
-          graft.operators.Dedup
-            .compactDedupIndexBatches(spark, indexPath, batchId)
-        val b = batch.persist()
-        try {
-          // hits vs everything accepted in PRIOR batches + intra-batch
-          // first-wins pairs (shared builder: Dedup.intakeDupHits)
-          val hits = graft.operators.Dedup
-            .intakeDupHits(spark, indexPath, b, numHashes, bands, minJ)
-            .drop("via")
-            .persist()
-          try {
-            // best match per flagged doc (highest J, lowest match id)
-            val best = hits.groupBy(col("query_id"))
-              .agg(max_by(struct(col("match_id"), col("jaccard")),
-                struct(col("jaccard"), (-col("match_id")).as("neg"))).as("m"))
-              .select(col("query_id").as("doc_id"),
-                col("m.match_id").as("dup_of"), col("m.jaccard").as("jaccard"))
-            val decisions = b.select(col("doc_id"))
-              .join(best, Seq("doc_id"), "left")
-              .withColumn("accepted", col("dup_of").isNull)
-              .withColumn("batch_id", lit(batchId))
-            decisions.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(decisionsDir)
-            // (3) append ONLY the accepted docs, idempotently
-            val accepted = b.join(
-              spark.read.parquet(decisionsDir)
-                .filter(col("batch_id") === batchId && col("accepted"))
-                .select(col("doc_id")), Seq("doc_id"), "left_semi")
-            graft.operators.Dedup.appendDedupIndexBatch(
-              spark, indexPath, accepted, batchId, numHashes, bands, shards)
-          } finally hits.unpersist(blocking = false)
-        } finally b.unpersist(blocking = false)
-      }
-      .start()
-  }
+                       compactEveryBatches: Int = 64): StreamingQuery =
+    maintainedIntakeQuery(spark, indexPath, docStream, decisionsDir, checkpoint,
+      numHashes, bands, shards, minJ, compactEveryBatches)(
+      batch => graft.operators.Dedup.hashedOf(batch)
+        .withColumn("stage_reason", lit(null).cast("string")),
+      rows => rows.select(col("doc_id"), col("dup_of"), col("jaccard"),
+        col("dup_of").isNull.as("accepted")))
 
   /** The FULL streaming CURATION intake — the crawl-intake deployment
     * of curateLlm's decision stages, per micro-batch of (doc_id, text):
     *
-    *   1. rule filter (t10, [[graft.operators.TextOps
-    *      .filterDecisionOn]] — the same implementation as the batch
-    *      gate query);
-    *   2. trained NB quality classifier (t29, `nbScoreOf` against the
-    *      model derived ONCE from `dir`'s seed classes and persisted
-    *      across batches — the fastText deployment shape);
-    *   3. benchmark decontamination (t12, `decontaminateOn` against
-    *      the eval-gram dictionary built once from `dir` and
-    *      persisted — broadcast per batch);
+    *   1. rule filter (t10, [[graft.operators.TextOps.filterReason]] —
+    *      the rules of the batch gate query);
+    *   2. trained NB quality classifier (t29, the
+    *      [[graft.operators.TextOps.NbTable]] lookup the batch
+    *      `nbScoreOf` scores with);
+    *   3. benchmark decontamination (t12, the eval-gram
+    *      [[graft.operators.TextOps.GramSet]] lookup `decontaminateOn`
+    *      uses);
     *   4. near-dup check against everything ACCEPTED so far (the
     *      [[dedupIntakeQuery]] machinery: maintained LSH index +
     *      intra-batch first-wins; an intra-batch hit only counts when
@@ -846,12 +809,18 @@ object Runner {
     * shingles append to the index ((batch_id, shard) dynamic
     * overwrite; one `shard=0` bucket file per batch at the default
     * `shards`, as [[dedupIntakeQuery]] explains) — both sinks
-    * exactly-once under replay. All model
-    * state is broadcast (NB counts, eval grams) or at rest (the LSH
-    * index); the batch itself never shuffles wider than its own
-    * (doc, gram) pairs. The maintained index folds in-loop past
-    * `compactEveryBatches` exactly as [[dedupIntakeQuery]] documents
-    * (same machinery, same exclusion of the in-flight batch). */
+    * exactly-once under replay. The maintained index folds in-loop
+    * past `compactEveryBatches` exactly as [[dedupIntakeQuery]]
+    * documents (same machinery, same exclusion of the in-flight batch).
+    *
+    * Verdict pass: stages 1–3 are ONE projection over one token array
+    * per row, which also hashes the doc's shingles — the per-document
+    * relation (doc_id, stage_reason, sh_hashes, n_sh) that the
+    * [[maintainedIntakeQuery]] body persists once per batch. The NB
+    * log-odds table and the eval-gram set are built on the driver in
+    * the query's FIRST micro-batch (so their cost is the stream's, not
+    * the caller's) and live as long as the query's closure; they are
+    * broadcast once, and nothing is persisted for them. */
   def curateIntakeQuery(spark: SparkSession, dir: String, indexPath: String,
                         docStream: DataFrame, decisionsDir: String,
                         checkpoint: String, evalN: Long = 50,
@@ -860,116 +829,115 @@ object Runner {
                         minJ: Double = graft.operators.Dedup.lshMinJ,
                         compactEveryBatches: Int = 64): StreamingQuery = {
     import graft.operators.{Dedup, TextOps}
+    lazy val tables = {
+      val docs = graft.Tables.documents(spark, dir)
+      (TextOps.nbTable(TextOps.nbModelOn(docs)), TextOps.evalGramSet(docs, evalN))
+    }
+    maintainedIntakeQuery(spark, indexPath, docStream, decisionsDir, checkpoint,
+      numHashes, bands, shards, minJ, compactEveryBatches)(
+      batch => {
+        val (nb, evalGrams) = tables
+        val toks = col("toks")
+        batch.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
+          .select(col("doc_id"),
+            // coalesce stops at the first failing stage: a doc the rules
+            // drop is never scored or gram-matched
+            coalesce(TextOps.filterReason(toks),
+              when(!nb.keep(toks), "classifier"),
+              when(evalGrams.matched(toks) > 0, "contaminated")).as("stage_reason"),
+            Dedup.shingleHashes(toks).as("sh_hashes"))
+          .withColumn("n_sh", size(col("sh_hashes")))
+      },
+      rows => rows
+        .withColumn("drop_reason",
+          coalesce(col("stage_reason"), when(col("dup_of").isNotNull, "duplicate")))
+        .select(col("doc_id"), col("drop_reason").isNull.as("accepted"),
+          col("drop_reason"),
+          // dup details only when duplicate IS the verdict
+          when(col("drop_reason") === "duplicate", col("dup_of")).as("dup_of"),
+          when(col("drop_reason") === "duplicate", col("jaccard")).as("jaccard")))
+  }
+
+  /** The body both maintained-index intakes share. Per micro-batch:
+    *
+    *   1. refuse a dial mismatch against the index's `_meta.json`
+    *      (or create it on the first batch) — before the fold and
+    *      before any write, so a refused restart leaves nothing behind;
+    *   2. finish a crashed fold, and fold past `compactEveryBatches`;
+    *   3. `judge` the batch into ONE per-document relation
+    *      (doc_id, stage_reason, sh_hashes, n_sh) and band it once;
+    *      both are persisted, and the index probe, the intra-batch LSH
+    *      ([[graft.operators.Dedup.intakeHitsOf]]), the decisions and
+    *      the index append all read them;
+    *   4. write each doc's decision (`decide` over
+    *      (doc_id, stage_reason, dup_of, jaccard), the best match per
+    *      doc: highest J, then lowest match id);
+    *   5. append the accepted docs, read back from the decisions just
+    *      written.
+    *
+    * Why step 5 reads the decisions back: the bucket write makes Spark
+    * re-cache every persisted plan over the index path (its
+    * `recacheByPath`), so an accepted set taken from a persisted
+    * decisions relation would be recomputed against an index that
+    * already holds this batch's buckets. The written partition is read
+    * with the schema in its footer, so the read-back runs no job. */
+  private def maintainedIntakeQuery(spark: SparkSession, indexPath: String,
+                                    docStream: DataFrame, decisionsDir: String,
+                                    checkpoint: String, numHashes: Int,
+                                    bands: Int, shards: Int, minJ: Double,
+                                    compactEveryBatches: Int)(
+      judge: DataFrame => DataFrame,
+      decide: DataFrame => DataFrame): StreamingQuery = {
+    import graft.operators.Dedup
     require(compactEveryBatches == 0 || compactEveryBatches >= 3,
       s"compactEveryBatches ($compactEveryBatches) must be 0 (off) or >= 3: " +
         "the fold leaves base + current = 2 partitions, so a threshold of " +
         "2 would rewrite the whole index on every batch")
-    // train/build the broadcast-side models ONCE, reuse every batch —
-    // their lifetime is the QUERY's: a termination listener below
-    // unpersists both when this query ends, so repeated start/stop
-    // cycles (the bench's guarded attempts, test suites, supervised
-    // restarts) don't accrete two cached relations per start
-    val model = TextOps.nbModel(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val evalDict = TextOps.evalGrams(spark, dir, evalN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val query = docStream
+    docStream
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        Dedup.ensureMaintainedDials(indexPath, numHashes, bands, shards)
         Dedup.recoverDedupIndexFolds(spark, indexPath)
         if (compactEveryBatches > 0 &&
             graft.sources.BatchFold
               .batchDirCount(spark, s"$indexPath/buckets")
               >= compactEveryBatches)
           Dedup.compactDedupIndexBatches(spark, indexPath, batchId)
-        val b = batch.persist()
+        val judged = judge(batch).persist()
         try {
-          val rules = TextOps.filterDecisionOn(b)
-            .select(col("doc_id"), col("drop_reason").as("rule_reason"))
-          val nb = TextOps.nbScoreOf(b, model)
-            .select(col("doc_id"), col("keep").as("nb_keep"))
-          val contam = TextOps.decontaminateOn(b, evalDict)
-            .select(col("doc_id"), col("contaminated"))
-          // stage decisions for every doc — needed BEFORE dup logic
-          // (intra-batch dup hits only count against stage-clean docs)
-          val stages = b.select(col("doc_id"))
-            .join(rules, Seq("doc_id"), "left")
-            .join(nb, Seq("doc_id"), "left")
-            .join(contam, Seq("doc_id"), "left")
-            .withColumn("stage_reason",
-              coalesce(col("rule_reason"),
-                when(!col("nb_keep"), "classifier"),
-                when(col("contaminated"), "contaminated")))
-            .select(col("doc_id"), col("stage_reason"))
-            .persist()
+          // a shingle-less doc shares nothing (its Jaccard is 0/0)
+          val hashed = judged.filter(col("n_sh") > 0)
+          val banded = Dedup.bandedOf(hashed, numHashes, bands, shards).persist()
           try {
-            // persisted (the dedupIntakeQuery pattern): hits feeds BOTH
-            // union branches of `honored` plus the best-match aggregate —
-            // unpersisted, the intra-batch LSH pass would re-evaluate
-            // per consumer every micro-batch
-            val hits = Dedup.intakeDupHits(spark, indexPath, b,
-              numHashes, bands, minJ)
-              .persist()
-            try {
-            val cleanIds = stages.filter(col("stage_reason").isNull)
-              .select(col("doc_id").as("match_id"))
-            // index hits always count (the index holds accepted docs);
-            // intra hits only against a stage-clean earlier partner
-            val honored = hits.filter(col("via") === "index")
-              .unionByName(hits.filter(col("via") === "intra")
-                .join(cleanIds, Seq("match_id"), "left_semi"))
-            val best = honored.groupBy(col("query_id"))
+            val best = Dedup.intakeHitsOf(spark, indexPath, hashed, banded,
+                hashed.filter(col("stage_reason").isNull),
+                Dedup.shardSetOf(banded, shards), minJ)
+              .groupBy(col("query_id"))
               .agg(max_by(struct(col("match_id"), col("jaccard")),
                 struct(col("jaccard"), (-col("match_id")).as("neg"))).as("m"))
               .select(col("query_id").as("doc_id"),
                 col("m.match_id").as("dup_of"), col("m.jaccard").as("jaccard"))
-            val decisions = stages
-              .join(best, Seq("doc_id"), "left")
-              .withColumn("drop_reason",
-                coalesce(col("stage_reason"),
-                  when(col("dup_of").isNotNull, "duplicate")))
-              .withColumn("accepted", col("drop_reason").isNull)
-              .select(col("doc_id"), col("accepted"), col("drop_reason"),
-                // dup details only when duplicate IS the verdict
-                when(col("drop_reason") === "duplicate", col("dup_of")).as("dup_of"),
-                when(col("drop_reason") === "duplicate", col("jaccard")).as("jaccard"))
+            decide(judged.select(col("doc_id"), col("stage_reason"))
+                .join(best, Seq("doc_id"), "left"))
               .withColumn("batch_id", lit(batchId))
-            decisions.write.mode("overwrite")
+              .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batch_id").parquet(decisionsDir)
-            val accepted = b.join(
-              spark.read.parquet(decisionsDir)
-                .filter(col("batch_id") === batchId && col("accepted"))
-                .select(col("doc_id")), Seq("doc_id"), "left_semi")
-            Dedup.appendDedupIndexBatch(spark, indexPath, accepted, batchId,
-              numHashes, bands, shards)
-            } finally hits.unpersist(blocking = false)
-          } finally stages.unpersist(blocking = false)
-        } finally b.unpersist(blocking = false)
+            // an empty micro-batch writes no partition and accepts nothing
+            val written = new org.apache.hadoop.fs.Path(s"$decisionsDir/batch_id=$batchId")
+            if (written.getFileSystem(spark.sessionState.newHadoopConf()).exists(written)) {
+              val accepted = graft.sources.Layout.readParquet(spark, written.toString)
+                .filter(col("accepted")).select(col("doc_id"))
+              Dedup.appendHashedBatch(spark, indexPath,
+                judged.join(accepted, Seq("doc_id"), "left_semi"),
+                banded.join(accepted, Seq("doc_id"), "left_semi"), batchId)
+            }
+          } finally banded.unpersist(blocking = false)
+        } finally judged.unpersist(blocking = false)
       }
       .start()
-    // release the per-query model caches when THIS query terminates
-    // (stop or failure) and retire the listener itself — the listener
-    // bus is asynchronous, so a query stopped before the listener
-    // registers leaks at most these two small relations once, bounded
-    // and cold-correct (unpersist is a cache hint, never correctness)
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-          if (e.id == query.id) {
-            model.unpersist(blocking = false)
-            evalDict.unpersist(blocking = false)
-            spark.streams.removeListener(this)
-          }
-      })
-    query
   }
 
   def annServeQuery(spark: SparkSession, dir: String, indexPath: String,
