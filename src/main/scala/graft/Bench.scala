@@ -260,16 +260,11 @@ object Bench {
       // lines as their incremental (serving) cost — within a pass the
       // cluster-label and ANN-model memos are the cross-query reuse a
       // real pipeline gets (dedup labels once; ANN trains models once)
-      operators.Dedup.invalidateClusterMemo()
-      operators.Similarity.invalidateModelMemo()
-      operators.TextOps.invalidateBpeMemo()
-      operators.TextOps.invalidateUnigramMemo()
-      operators.Hnsw.invalidateGraphMemo()
+      StampedMemo.clearAll()
       // shard residency starts cold each pass: v19_ann_hnsw_serve then
       // measures the first-touch tier and v19_ann_hnsw_serve_resident
       // (sorted after it) the resident steady state
       operators.Hnsw.ShardGraphCache.invalidate()
-      operators.Hnsw.invalidateDriftChecks()
       // anchor at every section BOUNDARY; a section's calib is the MEAN
       // of its two surrounding anchors — load ramping mid-section is
       // half-captured by the trailing anchor instead of missed entirely,

@@ -19,7 +19,9 @@ object Tables {
     * ASSUMES an immutable corpus: a path rewritten in place mid-JVM
     * keeps its stale stats (and thus its fan-out routing). That only
     * affects ROUTING, never results; the maintained stores write to
-    * fresh paths, so no current caller rewrites in place. */
+    * fresh paths, so no current caller rewrites in place. It stays
+    * outside [[StampedMemo]] on purpose: a content stamp is the very
+    * file listing this memo exists to save. */
   private val scanStats = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
 
   /** Below this input size the fan-out is skipped outright: tiny dim

@@ -129,8 +129,8 @@ object Dedup {
       // fanned: the tokenize + shingle + xxhash64-sort projection is the
       // pipeline's per-row-heavy map side — unfanned it ran as ~0.7 s
       // single-task stages serializing q34's whole d7 leg
-      // (ProfileStages r19); fanning measured d2/d7/d8 and the curate
-      // composites faster with oracle green (r19 A/B)
+      // (OPTIMIZATION_r19.md, finding 3); fanning measured d2/d7/d8 and
+      // the curate composites faster with oracle green (r19 A/B)
       withShingleHashes(Tables.documentsFanned(spark, dir), "text")
         .select(col("doc_id"), col("sh_hashes"), size(col("sh_hashes")).as("n_sh"))
         .persist()
@@ -377,14 +377,11 @@ object Dedup {
     * round — no vertex data ever leaves the cluster.
     *
     * The fast path's label table (bounded by `driverMaxEdges`) is
-    * memoized per (application, dir, minJ, content stamp): d7 and d8
-    * both need the pair graph — the most expensive subgraph in the
-    * suite — so the second caller reuses the labels instead of
-    * rebuilding the graph. An in-place rewrite of the input parquet
-    * re-keys structurally ([[graft.sources.ContentStamp]], round 13);
-    * [[invalidateClusterMemo]] remains for cold timing. The
-    * distributed fall-through is never memoized (its result is
-    * corpus-sized, not driver-bounded). */
+    * memoized on the documents relation's stamp ([[clusterMemo]]): d7
+    * and d8 both need the pair graph — the most expensive subgraph in
+    * the suite — so the second caller reuses the labels instead of
+    * rebuilding the graph. The distributed fall-through is never
+    * memoized (its result is corpus-sized, not driver-bounded). */
   def nearDupClusters(spark: SparkSession, dir: String, minJ: Double = ngramMinJ,
                       maxIters: Int = 20,
                       driverMaxEdges: Int = 100000): DataFrame =
@@ -394,33 +391,27 @@ object Dedup {
         (pairsRaw.select(col("id_a"), col("id_b")), scratch)
       },
       Tables.documents(spark, dir).select(col("doc_id")),
-      maxIters, driverMaxEdges,
-      (spark.sparkContext.applicationId, dir, "ngram", minJ,
-        graft.sources.ContentStamp.of(spark, s"$dir/documents.parquet")))
+      maxIters, driverMaxEdges, s"$dir/documents.parquet", ("ngram", minJ))
 
   /** Connected components over an arbitrary undirected PAIR graph — the
     * engine behind [[nearDupClusters]] (d7, n-gram pairs) and
     * `Similarity.embeddingClusters` (v14, cosine pairs). `pairsWithScratch`
     * is a THUNK so a memo hit never builds the pair graph at all;
     * `allIds` supplies the id universe as a single `doc_id` column
-    * (rename at the call site); `memoKey._3` tags the pair SOURCE so
-    * different graphs over the same dir don't collide in the memo;
-    * `memoKey._5` is the input relation's content stamp
-    * ([[graft.sources.ContentStamp]], round 13 — caller-computed,
-    * since only the caller knows which table the pairs derive from):
-    * an in-place rewrite re-keys structurally, stale-stamp entries
-    * purge at the next call. */
+    * (rename at the call site); `scope` is the relation the pairs
+    * derive from (only the caller knows which), and `params` tag the
+    * pair SOURCE and threshold so different graphs over one relation
+    * don't collide in the memo. */
   private[operators] def componentsOf(spark: SparkSession,
       pairsWithScratch: () => (DataFrame, Seq[DataFrame]),
       allIds: DataFrame, maxIters: Int, driverMaxEdges: Int,
-      memoKey: (String, String, String, Double, String)): DataFrame = {
-    if (driverMaxEdges > 0) {
-      clusterMemo.keySet.removeIf(k => k._1 == memoKey._1 &&
-        k._2 == memoKey._2 && k._3 == memoKey._3 &&
-        k._4 == memoKey._4 && k._5 != memoKey._5)
-      val hit = clusterMemo.get(memoKey)
-      if (hit != null) return labelsFor(spark, allIds, hit)
-    }
+      scope: String, params: (String, Double)): DataFrame = {
+    val stamp = graft.sources.ContentStamp.of(spark, scope)
+    if (driverMaxEdges > 0)
+      clusterMemo.get(spark, scope, params, stamp) match {
+        case Some(hit) => return labelsFor(spark, allIds, hit)
+        case None =>
+      }
     // unarmed variant: the fast-path probe collect below is an ACTION
     // referencing this scratch — armed, the sweep would unpersist it
     // before the distributed fall-through materializes pairs fully
@@ -464,7 +455,7 @@ object Dedup {
         val labels = parent.keys.toSeq.map(x => (x, find(x)))
         pairs.unpersist()
         scratch.foreach(_.unpersist()) // fast-path result doesn't read them
-        clusterMemo.put(memoKey, labels)
+        clusterMemo.put(spark, scope, params, stamp, labels)
         return labelsFor(spark, allIds, labels)
       }
     }
@@ -532,15 +523,11 @@ object Dedup {
     all
   }
 
-  /** Fast-path cluster-label memo — see [[componentsOf]]. Values are
-    * bounded (≤ 2 × driverMaxEdges entries, longs only) and there is at
-    * most one entry per (app, dir, source, threshold) actually queried,
-    * so this cannot grow past a handful of bounded tables per session. */
-  private val clusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String, Double, String), Seq[(Long, Long)]]()
+  /** Fast-path cluster-label memo ([[graft.StampedMemo]]) — see
+    * [[componentsOf]]. Values are bounded (≤ 2 × driverMaxEdges longs). */
+  private[graft] val clusterMemo = graft.StampedMemo[(String, Double), Seq[(Long, Long)]]()
 
-  /** Drop memoized cluster labels (call after rewriting input parquet
-    * in place — memo entries assume session-immutable inputs). */
+  /** Drop memoized cluster labels, to time a cold clustering. */
   def invalidateClusterMemo(): Unit = clusterMemo.clear()
 
   /** Memo contract for Bench's partial re-time pass, declared HERE so
@@ -559,8 +546,6 @@ object Dedup {
 
   /** Gate queries that TRAIN [[clusterMemo]] (see [[memoDeps]]). */
   val memoTrainers: Set[String] = Set("d7_near_dup_clusters")
-
-  private[graft] def clusterMemoSize: Int = clusterMemo.size
 
   /** Join a driver-held (doc_id → cluster_id) label table back over the
     * id universe; unlabeled ids are singletons labeling themselves. */

@@ -293,22 +293,14 @@ object Hnsw {
     searchLayer(q, ep, ef, frozen(0), g.vecs, visited)
   }
 
-  /** Session graph memo — the centsFor/booksFor pattern: the graph is a
+  /** Session graph memo ([[graft.StampedMemo]]): the graph is a
     * deterministic function of (corpus, m, efConstruction), so a session
-    * answering many queries builds it once (the production shape: build
-    * once, serve). */
-  private val graphMemo = new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int, String), Graph]()
-  private[graft] def invalidateGraphMemo(): Unit = graphMemo.clear()
+    * answering many queries builds it once (build once, serve). */
+  private[graft] val graphMemo = graft.StampedMemo[(Int, Int), Graph]()
 
   private[graft] def graphFor(spark: SparkSession, dir: String,
-                              m: Int, efConstruction: Int): Graph = {
-    // keyed by applicationId like every model memo in Similarity
-    // (centsFor/booksFor) PLUS the corpus relation's content stamp
-    // (round 13): a corpus regenerated under the same path — new
-    // session or same — must rebuild, never serve a stale graph
-    val stamp = corpusStamp(spark, dir)
-    graphMemo.keySet.removeIf(k => k._2 == dir && k._5 != stamp)
-    graphMemo.computeIfAbsent((spark.sparkContext.applicationId, dir, m, efConstruction, stamp), _ => {
+                              m: Int, efConstruction: Int): Graph =
+    graphMemo(spark, s"$dir/embeddings.parquet", (m, efConstruction)) {
       // bounded collect: the corpus vector relation, checked against
       // driverMaxVectors BEFORE collecting (count is a cheap column-
       // pruned scan; collecting first would OOM before the require)
@@ -321,8 +313,7 @@ object Hnsw {
       val rows = emb.select(col("vec_id"), col("embedding"))
         .as[(Long, Array[Float])].collect().sortBy(_._1)
       buildGraph(rows.map(_._1), rows.map(_._2), m, efConstruction)
-    })
-  }
+    }
 
   /** v18: HNSW ANN — driver graph search generates each query's
     * efSearch-shortlist; Spark rescores exactly (same cosine
@@ -605,7 +596,8 @@ object Hnsw {
     * with -Dgraft.hnsw.residentVectors for executors sized as serving
     * shards. A single graph over budget is kept alone (refusing would
     * break serve; the budget exists to stop unbounded accumulation
-    * across many indexes, not to reject one big shard). */
+    * across many indexes, not to reject one big shard). Unlike the
+    * driver-side [[graft.StampedMemo]], it lives on the executors. */
   private[graft] object ShardGraphCache {
     private val defaultBudget: Long = sys.props.get("graft.hnsw.residentVectors")
       .map(_.toLong).getOrElse(4000000L)
@@ -783,21 +775,11 @@ object Hnsw {
     }
   }
 
-  /** Drift validations already paid this session, keyed by the index
-    * CONTENT stamp — a serving tier validates corpus/index agreement
-    * once at graph load, not per batch; any index rewrite (new stamp)
-    * or new corpus dir re-validates. Stale-stamp entries for the same
-    * (app, dir, indexPath) are purged before each new validation (the
-    * removeIf pattern every stamp-keyed memo uses): the stamp embeds
-    * the full per-shard file listing, so under a maintain stream every
-    * batch mints a new one — without the purge the designed steady
-    * state (maintain + per-batch serve) would accrete dead entries
-    * forever. */
-  private val shardedDriftChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, String, String)]()
-  private[graft] def invalidateDriftChecks(): Unit = shardedDriftChecked.clear()
-  /** Observability + the spec's leak pin: live drift entries. */
-  private[graft] def driftCheckedSize: Int = shardedDriftChecked.size()
+  /** Drift validations already paid this session ([[graft.StampedMemo]],
+    * stamped by the index's per-shard stamps plus the corpus stamp) — a
+    * serving tier validates corpus/index agreement once at graph load,
+    * not per batch; an index or corpus rewrite re-validates. */
+  private[graft] val driftChecked = graft.StampedMemo[Unit, Unit]()
 
   /** Serve from a [[writeHnswIndexSharded]] index — the fan-out/merge
     * deployment in its SERVING-TIER shape: the bounded query set fans
@@ -839,17 +821,10 @@ object Hnsw {
     // missing from the corpus silently drops from the rescore join.
     // nIndexed == nCorpus plus indexed ⊆ corpus ⇒ the id sets are
     // equal — two id-only aggregates, no wide shuffle. Validated once
-    // per (session, CORPUS content, index CONTENT) — the resident
-    // tier's check-at-load; an append (new index stamp) OR an in-place
-    // corpus rewrite (new corpus stamp — the ContentStamp contract
-    // every other memo carries) re-validates.
+    // per (session, corpus content, index content): [[driftChecked]].
     val globalStamp = stamps.map { case (s, st) => s"$s=$st" }.mkString("|") +
-      "||" + corpusStamp(spark, dir)
-    val driftKey = (spark.sparkContext.applicationId, dir, indexPath, globalStamp)
-    shardedDriftChecked.removeIf(k =>
-      k._1 == driftKey._1 && k._2 == dir && k._3 == indexPath &&
-        k._4 != globalStamp)
-    if (!shardedDriftChecked.contains(driftKey)) {
+      "||" + graft.sources.ContentStamp.of(spark, s"$dir/embeddings.parquet")
+    driftChecked(spark, s"$indexPath <- $dir/embeddings.parquet", (), globalStamp) {
       val graph = spark.read.parquet(s"$indexPath/graph")
       val level0Ids = graph.filter(col("level") === 0).select(col("vec_id"))
       val nIndexed = level0Ids.count()
@@ -865,7 +840,6 @@ object Hnsw {
           s"the index at $indexPath never saw — un-indexed vectors are in no " +
           "shard graph, so no walk can ever reach them (silent recall loss); " +
           "appendHnswIndexSharded the new vectors or rebuild")
-      shardedDriftChecked.add(driftKey)
     }
     val qs = collectQueries(spark, emb, nQueries)
     serveShardedCore(spark, indexPath, qs, k, efSearch, stamps, m, efC)
@@ -1058,11 +1032,10 @@ object Hnsw {
       md.digest(stamp.getBytes("UTF-8")).map("%02x".format(_)).mkString
     }
 
-    /** One live (digest, capacity, bloom) per (app, index) — replaced
-      * in place on every append, so the designed steady state holds
-      * one entry per maintained index, not one per batch. */
-    private val memo = new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Long, BloomFilter)]()
-    private[graft] def invalidateBloomMemo(): Unit = memo.clear()
+    /** (capacity, bloom) per index ([[graft.StampedMemo]], stamped by
+      * the digest of the `graph/` stamp), restamped on every append. */
+    private[graft] val memo = graft.StampedMemo[Unit, (Long, BloomFilter)]()
+    private def scope(indexPath: String) = s"$indexPath/graph"
     /** Observability + the spec's rebuild pin. */
     private val rebuilds = new java.util.concurrent.atomic.AtomicLong()
     private[graft] def rebuildCount: Long = rebuilds.get()
@@ -1125,14 +1098,12 @@ object Hnsw {
     /** The (capacity, bloom) valid for `stamp` WITHOUT rebuilding:
       * session memo first, then the sidecar; None on any digest
       * mismatch. */
-    private def validFor(spark: SparkSession, indexPath: String,
-                         stamp: String): Option[(Long, BloomFilter)] = {
-      val key = (spark.sparkContext.applicationId, indexPath)
+    private[graft] def validFor(spark: SparkSession, indexPath: String,
+                                stamp: String): Option[(Long, BloomFilter)] = {
       val dg = digestOf(stamp)
-      Option(memo.get(key)).collect { case (d, c, b) if d == dg => (c, b) }
+      memo.get(spark, scope(indexPath), (), dg)
         .orElse(readSidecar(spark, indexPath).collect {
-          case (d, c, b) if d == dg =>
-            memo.put(key, (dg, c, b)); (c, b)
+          case (d, c, b) if d == dg => memo.put(spark, scope(indexPath), (), dg, (c, b))
         })
     }
 
@@ -1165,9 +1136,7 @@ object Hnsw {
             (sized, buildBloom(rel, sized))
           }
         writeSidecar(spark, indexPath, digestOf(stamp), cap, b)
-        memo.put((spark.sparkContext.applicationId, indexPath),
-          (digestOf(stamp), cap, b))
-        (cap, b)
+        memo.put(spark, scope(indexPath), (), digestOf(stamp), (cap, b))
       }
 
     /** Eagerly materialize the bloom increment for an append's fresh
@@ -1196,10 +1165,9 @@ object Hnsw {
 
     private def restamp(spark: SparkSession, indexPath: String,
                         cap: Long, bloom: BloomFilter): Unit = {
-      val dg = digestOf(
-        graft.sources.ContentStamp.of(spark, s"$indexPath/graph"))
+      val dg = digestOf(graft.sources.ContentStamp.of(spark, scope(indexPath)))
       writeSidecar(spark, indexPath, dg, cap, bloom)
-      memo.put((spark.sparkContext.applicationId, indexPath), (dg, cap, bloom))
+      memo.put(spark, scope(indexPath), (), dg, (cap, bloom)); ()
     }
 
     /** After a write that did NOT change the id set (reshard /
@@ -1209,16 +1177,13 @@ object Hnsw {
                   preStamp: String): Unit =
       validFor(spark, indexPath, preStamp) match {
         case Some((c, b)) => restamp(spark, indexPath, c, b)
-        case None =>
-          memo.remove((spark.sparkContext.applicationId, indexPath))
-          fsOf(spark, indexPath).delete(sidecar(indexPath), false); ()
+        case None => drop(spark, indexPath)
       }
 
     /** A write that changed the id set withOUT folding its ids in (the
       * corpus-diff routed append when no valid bloom existed): drop
       * any sidecar so nothing downstream can trust a stale one. */
     def drop(spark: SparkSession, indexPath: String): Unit = {
-      memo.remove((spark.sparkContext.applicationId, indexPath))
       fsOf(spark, indexPath).delete(sidecar(indexPath), false); ()
     }
 
@@ -1234,10 +1199,6 @@ object Hnsw {
           mergeAndRestamp(spark, indexPath, c, b, inc)
         case _ => drop(spark, indexPath)
       }
-
-    private[graft] def preBloomFor(spark: SparkSession, indexPath: String,
-                                   preStamp: String): Option[(Long, BloomFilter)] =
-      validFor(spark, indexPath, preStamp)
   }
 
   /** LSM-style batch append: the not-yet-indexed vectors of `newVecs`
@@ -1428,7 +1389,7 @@ object Hnsw {
     // a valid pre-write bloom ([[IdBloom]]) gets this append's ids
     // folded in post-write; captured BEFORE the rewrite (the diff
     // below must never recompute against the rewritten graph)
-    val preBloom = IdBloom.preBloomFor(spark, indexPath, stampPre)
+    val preBloom = IdBloom.validFor(spark, indexPath, stampPre)
     val graph =
       if (stampPre.nonEmpty)
         spark.read.parquet(graphPath.toString)
@@ -1659,10 +1620,4 @@ object Hnsw {
       "efConstruction" -> efC, "nShards" -> newNShards))
     IdBloom.carryOver(spark, indexPath, stampPre)
   }
-
-  /** Content stamp of the corpus relation — keys [[graphFor]]'s build
-    * memo and [[annHnswServeSharded]]'s drift check: a regenerated
-    * corpus under the same path must rebuild and re-validate. */
-  private def corpusStamp(spark: SparkSession, dir: String): String =
-    graft.sources.ContentStamp.ofCorpus(spark, dir)
 }

@@ -208,49 +208,30 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos"))
   }
 
-  /** Driver-held model memo: the Lloyd-trained coarse centroids and PQ
-    * codebooks are deterministic functions of (corpus, params) —
-    * id-ordered seeds, exact double means — so retraining per
-    * invocation is pure waste in a session answering many queries. This
-    * is the production ANN shape (train the index model ONCE, serve)
-    * and the d7/d8 cluster-memo pattern: within a bench pass the first
-    * trainer (v4/v8) carries the training cost and later callers (v9,
-    * the `_prod` lines) see serving cost. Values are tiny
-    * (≤ nClusters×dim / m×nCodes×subDim floats); keys include the
-    * applicationId so a new session never sees a stale model, PLUS the
-    * corpus relation's content stamp ([[graft.sources.ContentStamp]],
-    * round 13): a corpus rewritten in place re-keys structurally, so a
-    * stale model can't be looked up — and can't be PERSISTED into an
-    * index by [[writeAnnIndex]]. [[invalidateModelMemo]] remains for
-    * cold-train timing (Bench/TimeQ), not correctness. */
-  private val centsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Double, String), Seq[(Long, Array[Float])]]()
-  private val booksMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int, String), Seq[Seq[Array[Float]]]]()
-
-  private def corpusStamp(spark: SparkSession, dir: String): String =
-    graft.sources.ContentStamp.ofCorpus(spark, dir)
+  /** Driver-held model memos ([[graft.StampedMemo]]): the Lloyd-trained
+    * coarse centroids and PQ codebooks are deterministic functions of
+    * (corpus, params) — id-ordered seeds, exact double means — so a
+    * session trains each once; within a bench pass the first trainer
+    * (v4/v8) carries the training cost and later callers (v9, the
+    * `_prod` lines) see serving cost. A corpus rewritten in place
+    * re-stamps, so a stale model is neither served nor PERSISTED into
+    * an index by [[writeAnnIndex]]. */
+  private[graft] val centsMemo = graft.StampedMemo[(Int, Int, Double), Seq[(Long, Array[Float])]]()
+  private[graft] val booksMemo = graft.StampedMemo[(Int, Int, Int), Seq[Seq[Array[Float]]]]()
 
   private[graft] def centsFor(spark: SparkSession, dir: String, nClusters: Int,
-                       iters: Int, trainFraction: Double): Seq[(Long, Array[Float])] = {
-    val stamp = corpusStamp(spark, dir)
-    centsMemo.keySet.removeIf(k => k._2 == dir && k._6 != stamp)
-    centsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, nClusters, iters, trainFraction, stamp),
-      _ => ivfCentroids(Tables.embeddings(spark, dir), nClusters, iters, trainFraction))
-  }
+                       iters: Int, trainFraction: Double): Seq[(Long, Array[Float])] =
+    centsMemo(spark, s"$dir/embeddings.parquet", (nClusters, iters, trainFraction)) {
+      ivfCentroids(Tables.embeddings(spark, dir), nClusters, iters, trainFraction)
+    }
 
   private def booksFor(spark: SparkSession, dir: String, m: Int,
-                       nCodes: Int, iters: Int): Seq[Seq[Array[Float]]] = {
-    val stamp = corpusStamp(spark, dir)
-    booksMemo.keySet.removeIf(k => k._2 == dir && k._6 != stamp)
-    booksMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, m, nCodes, iters, stamp),
-      _ => pqCodebooks(Tables.embeddings(spark, dir), m, nCodes, iters))
-  }
+                       nCodes: Int, iters: Int): Seq[Seq[Array[Float]]] =
+    booksMemo(spark, s"$dir/embeddings.parquet", (m, nCodes, iters)) {
+      pqCodebooks(Tables.embeddings(spark, dir), m, nCodes, iters)
+    }
 
-  /** Drop memoized ANN models (call after rewriting input parquet in
-    * place, or to time a cold train — see Bench/TimeQ). */
+  /** Drop memoized ANN models, to time a cold train (Bench, perfbench). */
   def invalidateModelMemo(): Unit = {
     centsMemo.clear(); booksMemo.clear(); residBooksMemo.clear()
   }
@@ -1085,28 +1066,22 @@ object Similarity {
   }
 
   /** Residual codebook memo (the [[booksMemo]] pattern — residual
-    * codebooks depend on the coarse quantizer too, so the key carries
+    * codebooks depend on the coarse quantizer too, so the params carry
     * both dial sets). */
-  private val residBooksMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, String), Seq[Seq[Array[Float]]]]()
+  private[graft] val residBooksMemo =
+    graft.StampedMemo[(Int, Int, Int, Int, Int), Seq[Seq[Array[Float]]]]()
 
   private def residBooksFor(spark: SparkSession, dir: String, nClusters: Int,
                             cIters: Int, m: Int, nCodes: Int,
-                            iters: Int): Seq[Seq[Array[Float]]] = {
-    val stamp = corpusStamp(spark, dir)
-    residBooksMemo.keySet.removeIf(k => k._2 == dir && k._4 != stamp)
-    residBooksMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir,
-        s"$nClusters:$cIters:$m:$nCodes:$iters", stamp),
-      _ => {
-        val emb = Tables.embeddings(spark, dir)
-        val cents = centsFor(spark, dir, nClusters, cIters, trainFraction = 1.0)
-        pqCodebooks(
-          emb.select(col("vec_id"),
-            residualCol(cents, col("embedding")).as("embedding")),
-          m, nCodes, iters)
-      })
-  }
+                            iters: Int): Seq[Seq[Array[Float]]] =
+    residBooksMemo(spark, s"$dir/embeddings.parquet", (nClusters, cIters, m, nCodes, iters)) {
+      val emb = Tables.embeddings(spark, dir)
+      val cents = centsFor(spark, dir, nClusters, cIters, trainFraction = 1.0)
+      pqCodebooks(
+        emb.select(col("vec_id"),
+          residualCol(cents, col("embedding")).as("embedding")),
+        m, nCodes, iters)
+    }
 
   /** v9 with RESIDUAL encoding — the FAISS IVFPQ default: PQ codebooks
     * are trained on (and codes encode) r = x − centroid(cell(x))
@@ -1491,9 +1466,7 @@ object Similarity {
         (pairs.select(col("id_a"), col("id_b")), Nil)
       },
       Tables.embeddings(spark, dir).select(col("vec_id").as("doc_id")),
-      maxIters, driverMaxEdges,
-      (spark.sparkContext.applicationId, dir, source, minCos,
-        corpusStamp(spark, dir)))
+      maxIters, driverMaxEdges, s"$dir/embeddings.parquet", (source, minCos))
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
   }
 

@@ -1439,66 +1439,63 @@ object TextOps {
       .toDF("rank", "left", "right", "merged", "pair_count")
   }
 
-  /** Driver-held BPE model memo (the Similarity centsFor pattern):
-    * training is a deterministic function of (corpus, params), so
-    * t27 trains once per session and t28's tokenization serves the
-    * memoized table. Keyed by applicationId — a new session never
-    * sees a stale model; [[invalidateBpeMemo]] for in-place rewrites
-    * and Bench's cold-pass contract. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), Seq[(Int, String, String, String, Long)]]()
+  /** Driver-held BPE model memo ([[graft.StampedMemo]]): training is a
+    * deterministic function of (corpus, params), so t27 trains once per
+    * session and t28 serves the memoized table; a documents relation
+    * rewritten in place re-stamps and retrains. */
+  private[graft] val bpeMemo = graft.StampedMemo[(Int, Int), Seq[(Int, String, String, String, Long)]]()
 
+  /** Drop memoized BPE models, to time a cold train (Bench, perfbench). */
   def invalidateBpeMemo(): Unit = bpeMemo.clear()
 
   private def trainBpe(spark: SparkSession, dir: String, nMerges: Int,
                        maxDistinctWords: Int): Seq[(Int, String, String, String, Long)] =
-    bpeMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, nMerges, maxDistinctWords), _ => {
-        require(nMerges >= 1 && maxDistinctWords >= 1)
-        val hist = Tables.documents(spark, dir)
-          .select(explode(tokens("text")).as("word"))
-          .groupBy(col("word")).agg(count(lit(1)).as("n"))
-        val rows = hist.limit(maxDistinctWords + 1).collect()
-        require(rows.length <= maxDistinctWords,
-          s"corpus has > $maxDistinctWords distinct words; raise maxDistinctWords " +
-            "(the histogram stays cluster-side until this bounded collect)")
-        // words as symbol sequences with the end-of-word marker — one
-        // symbol per CODE POINT (the segmenter's shared derivation, so
-        // non-BMP characters never split into surrogate halves)
-        var words: Array[(Array[String], Long)] = rows.map { r =>
-          (graft.functions.BpeSegment.codePointSymbols(r.getString(0)) :+ "</w>",
-            r.getLong(1))
+    bpeMemo(spark, s"$dir/documents.parquet", (nMerges, maxDistinctWords)) {
+      require(nMerges >= 1 && maxDistinctWords >= 1)
+      val hist = Tables.documents(spark, dir)
+        .select(explode(tokens("text")).as("word"))
+        .groupBy(col("word")).agg(count(lit(1)).as("n"))
+      val rows = hist.limit(maxDistinctWords + 1).collect()
+      require(rows.length <= maxDistinctWords,
+        s"corpus has > $maxDistinctWords distinct words; raise maxDistinctWords " +
+          "(the histogram stays cluster-side until this bounded collect)")
+      // words as symbol sequences with the end-of-word marker — one
+      // symbol per CODE POINT (the segmenter's shared derivation, so
+      // non-BMP characters never split into surrogate halves)
+      var words: Array[(Array[String], Long)] = rows.map { r =>
+        (graft.functions.BpeSegment.codePointSymbols(r.getString(0)) :+ "</w>",
+          r.getLong(1))
+      }
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
+      var rank = 0
+      var continue = true
+      while (rank < nMerges && continue) {
+        val pairCounts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+        for ((syms, n) <- words; i <- 0 until syms.length - 1) {
+          val p = (syms(i), syms(i + 1))
+          pairCounts(p) = pairCounts.getOrElse(p, 0L) + n
         }
-        val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-        var rank = 0
-        var continue = true
-        while (rank < nMerges && continue) {
-          val pairCounts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-          for ((syms, n) <- words; i <- 0 until syms.length - 1) {
-            val p = (syms(i), syms(i + 1))
-            pairCounts(p) = pairCounts.getOrElse(p, 0L) + n
-          }
-          val best = pairCounts.toSeq
-            .sortBy { case ((l, r), c) => (-c, l, r) }.headOption
-          best match {
-            case Some(((l, r), c)) if c >= 2 =>
-              rank += 1
-              merges += ((rank, l, r, l + r, c))
-              words = words.map { case (syms, n) =>
-                val out = scala.collection.mutable.ArrayBuffer.empty[String]
-                var i = 0
-                while (i < syms.length) {
-                  if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == r) {
-                    out += l + r; i += 2
-                  } else { out += syms(i); i += 1 }
-                }
-                (out.toArray, n)
+        val best = pairCounts.toSeq
+          .sortBy { case ((l, r), c) => (-c, l, r) }.headOption
+        best match {
+          case Some(((l, r), c)) if c >= 2 =>
+            rank += 1
+            merges += ((rank, l, r, l + r, c))
+            words = words.map { case (syms, n) =>
+              val out = scala.collection.mutable.ArrayBuffer.empty[String]
+              var i = 0
+              while (i < syms.length) {
+                if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == r) {
+                  out += l + r; i += 2
+                } else { out += syms(i); i += 1 }
               }
-            case _ => continue = false
-          }
+              (out.toArray, n)
+            }
+          case _ => continue = false
         }
-        merges.toSeq
-      })
+      }
+      merges.toSeq
+    }
 
   /** t28: tokenize the corpus with the learned BPE merges — the apply
     * side of t27, closing the loop a real pipeline runs (train the
@@ -1558,9 +1555,11 @@ object TextOps {
       .toDF("piece", "count", "logprob")
   }
 
-  private val unigramMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int, Int), Seq[(String, Long, Double, Double)]]()
+  /** Driver-held unigram model memo — the [[bpeMemo]] pattern (t32
+    * trains, t33 serves). */
+  private[graft] val unigramMemo = graft.StampedMemo[(Int, Int, Int, Int), Seq[(String, Long, Double, Double)]]()
 
+  /** Drop memoized unigram models, to time a cold train. */
   def invalidateUnigramMemo(): Unit = unigramMemo.clear()
 
   /** Returns (piece, count, logprob rounded to 6 dp, logprob RAW). The
@@ -1573,59 +1572,58 @@ object TextOps {
   private def trainUnigram(spark: SparkSession, dir: String, vocabSize: Int,
                            maxPieceLen: Int, emIters: Int,
                            maxDistinctWords: Int): Seq[(String, Long, Double, Double)] =
-    unigramMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, vocabSize, maxPieceLen, emIters,
-        maxDistinctWords), _ => {
-        require(vocabSize >= 1 && maxPieceLen >= 1 && emIters >= 1)
-        val rows = Tables.documents(spark, dir)
-          .select(explode(tokens("text")).as("word"))
-          .groupBy(col("word")).agg(count(lit(1)).as("n"))
-          .limit(maxDistinctWords + 1).collect()
-        require(rows.length <= maxDistinctWords,
-          s"corpus has > $maxDistinctWords distinct words; raise maxDistinctWords " +
-            "(the histogram stays cluster-side until this bounded collect)")
-        val words: Array[(Array[String], Long)] = rows.map { r =>
-          (graft.functions.BpeSegment.codePointSymbols(r.getString(0)), r.getLong(1))
-        }
-        // occurrence-weighted substring seed
-        val seed = scala.collection.mutable.HashMap.empty[String, Long]
-        for ((cps, n) <- words; j <- cps.indices;
-             i <- (j + 1) to math.min(j + maxPieceLen, cps.length)) {
-          val p = cps.slice(j, i).mkString
-          seed(p) = seed.getOrElse(p, 0L) + n
-        }
-        val singles: Seq[String] =
-          seed.keys.filter(p => p.codePointCount(0, p.length) == 1).toSeq.sorted
-        val seedBudget = vocabSize * 4
-        var counts: Map[String, Long] =
-          singles.map(s => s -> seed(s)).toMap ++
-            seed.iterator.filter { case (p, _) => p.codePointCount(0, p.length) > 1 }
-              .toSeq.sortBy { case (p, c) => (-c, p) }.take(seedBudget).toMap
-        for (it <- 1 to emIters) {
-          val lp = new java.util.HashMap[String, java.lang.Double](counts.size * 2)
-          val total = counts.valuesIterator.sum.toDouble
-          counts.foreach { case (p, c) => lp.put(p, math.log(c / total)) }
-          val em = scala.collection.mutable.HashMap.empty[String, Long]
-          for ((cps, n) <- words;
-               s <- graft.functions.UnigramSegment.viterbi(cps, lp, maxPieceLen))
-            em(s) = em.getOrElse(s, 0L) + n
-          // singles never die (floor 1); multis live only if used; linear
-          // prune schedule seedBudget → vocabSize across the EM rounds
-          val budget = vocabSize + ((seedBudget - vocabSize).toLong *
-            (emIters - it) / emIters).toInt
-          val multiBudget = math.max(budget - singles.length, 0)
-          counts = singles.map(s => s -> math.max(em.getOrElse(s, 0L), 1L)).toMap ++
-            em.iterator.filter { case (p, c) =>
-              p.codePointCount(0, p.length) > 1 && c > 0 }
-              .toSeq.sortBy { case (p, c) => (-c, p) }.take(multiBudget).toMap
-        }
+    unigramMemo(spark, s"$dir/documents.parquet",
+      (vocabSize, maxPieceLen, emIters, maxDistinctWords)) {
+      require(vocabSize >= 1 && maxPieceLen >= 1 && emIters >= 1)
+      val rows = Tables.documents(spark, dir)
+        .select(explode(tokens("text")).as("word"))
+        .groupBy(col("word")).agg(count(lit(1)).as("n"))
+        .limit(maxDistinctWords + 1).collect()
+      require(rows.length <= maxDistinctWords,
+        s"corpus has > $maxDistinctWords distinct words; raise maxDistinctWords " +
+          "(the histogram stays cluster-side until this bounded collect)")
+      val words: Array[(Array[String], Long)] = rows.map { r =>
+        (graft.functions.BpeSegment.codePointSymbols(r.getString(0)), r.getLong(1))
+      }
+      // occurrence-weighted substring seed
+      val seed = scala.collection.mutable.HashMap.empty[String, Long]
+      for ((cps, n) <- words; j <- cps.indices;
+           i <- (j + 1) to math.min(j + maxPieceLen, cps.length)) {
+        val p = cps.slice(j, i).mkString
+        seed(p) = seed.getOrElse(p, 0L) + n
+      }
+      val singles: Seq[String] =
+        seed.keys.filter(p => p.codePointCount(0, p.length) == 1).toSeq.sorted
+      val seedBudget = vocabSize * 4
+      var counts: Map[String, Long] =
+        singles.map(s => s -> seed(s)).toMap ++
+          seed.iterator.filter { case (p, _) => p.codePointCount(0, p.length) > 1 }
+            .toSeq.sortBy { case (p, c) => (-c, p) }.take(seedBudget).toMap
+      for (it <- 1 to emIters) {
+        val lp = new java.util.HashMap[String, java.lang.Double](counts.size * 2)
         val total = counts.valuesIterator.sum.toDouble
-        counts.toSeq.sortBy { case (p, c) => (-c, p) }.map { case (p, c) =>
-          val raw = math.log(c / total)
-          (p, c, BigDecimal(raw)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, raw)
-        }
-      })
+        counts.foreach { case (p, c) => lp.put(p, math.log(c / total)) }
+        val em = scala.collection.mutable.HashMap.empty[String, Long]
+        for ((cps, n) <- words;
+             s <- graft.functions.UnigramSegment.viterbi(cps, lp, maxPieceLen))
+          em(s) = em.getOrElse(s, 0L) + n
+        // singles never die (floor 1); multis live only if used; linear
+        // prune schedule seedBudget → vocabSize across the EM rounds
+        val budget = vocabSize + ((seedBudget - vocabSize).toLong *
+          (emIters - it) / emIters).toInt
+        val multiBudget = math.max(budget - singles.length, 0)
+        counts = singles.map(s => s -> math.max(em.getOrElse(s, 0L), 1L)).toMap ++
+          em.iterator.filter { case (p, c) =>
+            p.codePointCount(0, p.length) > 1 && c > 0 }
+            .toSeq.sortBy { case (p, c) => (-c, p) }.take(multiBudget).toMap
+      }
+      val total = counts.valuesIterator.sum.toDouble
+      counts.toSeq.sortBy { case (p, c) => (-c, p) }.map { case (p, c) =>
+        val raw = math.log(c / total)
+        (p, c, BigDecimal(raw)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, raw)
+      }
+    }
 
   /** t33: tokenize the corpus with the learned unigram-LM pieces — the
     * apply side of t32, via the native `unigram_segment` expression

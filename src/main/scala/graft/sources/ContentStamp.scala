@@ -3,17 +3,16 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Content stamp of an at-rest relation — the invalidation currency of
-  * every corpus-derived driver memo (round 13, generalizing the
-  * sharded-HNSW `ShardGraphCache` contract): the sorted
+  * every corpus-derived driver memo ([[graft.StampedMemo]]; round 13,
+  * generalizing the sharded-HNSW `ShardGraphCache` contract): the sorted
   * path:length:mtime[:etag] listing of a relation's visible files
-  * changes exactly when the relation's bytes change, so a memo KEYED
-  * by the stamp can never return a value derived from rewritten data —
-  * staleness becomes a lookup miss, not a protocol the caller must
-  * remember (`invalidate*Memo()` remains for cold-timing, but
-  * correctness no longer depends on anyone calling it). One listing
-  * round per directory level to the relation's own filesystem per
-  * memoized call — noise next to what these memos guard (k-means
-  * training, union-find clustering, graph construction).
+  * changes exactly when the relation's bytes change, so a memo stamped
+  * with it can never return a value derived from rewritten data —
+  * staleness is a lookup miss, not a protocol the caller must remember.
+  * One listing round per directory level to the relation's own
+  * filesystem per memoized call — noise next to what these memos guard
+  * (k-means and tokenizer training, union-find clustering, graph
+  * construction).
   *
   * GRANULARITY — what the stamp can and cannot see. Each entry is
   * name:length:mtime, so an in-place rewrite that keeps the file NAME
@@ -121,10 +120,4 @@ object ContentStamp {
       .map { case (name, entries) => (name, entries.sorted.mkString(";")) }
       .sortBy(_._1)
   }
-
-  /** The corpus-relation stamp every embedding-derived memo keys on
-    * (one definition — Hnsw and Similarity share it, so the formats
-    * cannot drift apart). */
-  def ofCorpus(spark: SparkSession, dir: String): String =
-    of(spark, s"$dir/embeddings.parquet")
 }

@@ -43,13 +43,13 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("construction and search are deterministic") {
     val a = rows(Hnsw.annHnsw(spark, sf, efSearch = 64))
-    Hnsw.invalidateGraphMemo()
+    Hnsw.graphMemo.clear()
     val b = rows(Hnsw.annHnsw(spark, sf, efSearch = 64))
     assert(a == b)
   }
 
   test("the graph memo is a real memo (same instance within a session)") {
-    Hnsw.invalidateGraphMemo()
+    Hnsw.graphMemo.clear()
     val g1 = Hnsw.graphFor(spark, sf, 8, 96)
     val g2 = Hnsw.graphFor(spark, sf, 8, 96)
     assert(g1 eq g2)
@@ -153,7 +153,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-resident").toString
     Hnsw.writeHnswIndexSharded(spark, sf, idx, nShards = 4)
     Hnsw.ShardGraphCache.invalidate()
-    Hnsw.invalidateDriftChecks()
+    Hnsw.driftChecked.clear()
     val first = rows(Hnsw.annHnswServeSharded(spark, sf, idx, efSearch = 64))
     val loadsAfterFirst = Hnsw.ShardGraphCache.loadCount
     assert(Hnsw.ShardGraphCache.residentShards(idx) == Set(0, 1, 2, 3),
@@ -189,7 +189,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-res-app").toString
     Hnsw.writeHnswIndexSharded(spark, base, idx, nShards = 4)
     Hnsw.ShardGraphCache.invalidate()
-    Hnsw.invalidateDriftChecks()
+    Hnsw.driftChecked.clear()
     Hnsw.annHnswServeSharded(spark, base, idx).count() // populate residency
     val loads0 = Hnsw.ShardGraphCache.loadCount
     // additions all ≡ 0 (mod 4): append rewrites shard 0 only
@@ -209,7 +209,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-rewrite").toString
     Hnsw.writeHnswIndexSharded(spark, sf, idx, nShards = 4)
     Hnsw.ShardGraphCache.invalidate()
-    Hnsw.invalidateDriftChecks()
+    Hnsw.driftChecked.clear()
     Hnsw.annHnswServeSharded(spark, sf, idx).count() // resident @ 4 shards
     // overwrite IN PLACE with a different shard count (a re-shard —
     // the operational event a path-keyed cache would serve stale)
@@ -249,7 +249,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = forge(100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-drift").toString
     Hnsw.writeHnswIndexSharded(spark, base, idx, nShards = 2)
-    Hnsw.invalidateDriftChecks()
+    Hnsw.driftChecked.clear()
     // corpus GREW past the index: un-indexed vectors are unreachable
     val grown = forge(120)
     val e1 = intercept[IllegalArgumentException] {
@@ -474,7 +474,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = forgeCorpus(col("vec_id") < 100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-seg").toString
     Hnsw.writeHnswIndexSharded(spark, base, idx, nShards = 4)
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
     Hnsw.annHnswServeSharded(spark, base, idx).count() // residency warm
     val loads0 = Hnsw.ShardGraphCache.loadCount
     def shardDirs() = new java.io.File(s"$idx/graph").listFiles()
@@ -532,7 +532,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(debris.getPath, "_temporary"),
       Array.empty[Byte])
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, base, idx, efSearch = 256)) ==
       rows(Similarity.annBruteForce(spark, base)),
       "serve must skip the empty partition, not refuse on it")
@@ -553,7 +553,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = forgeCorpus(col("vec_id") < 100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-driftstamp").toString
     Hnsw.writeHnswIndexSharded(spark, dir, idx, nShards = 4)
-    Hnsw.invalidateDriftChecks()
+    Hnsw.driftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, dir, idx, efSearch = 256)) ==
       rows(Similarity.annBruteForce(spark, dir))) // drift check cached
     // regenerate the corpus under the SAME path with a smaller id set:
@@ -803,7 +803,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val emb = graft.Tables.embeddings(spark, corpus)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-bloom").toString
     Hnsw.ensureShardedMeta(idx, 8, 96, 4)
-    Hnsw.IdBloom.invalidateBloomMemo()
+    Hnsw.IdBloom.memo.clear()
     val rb0 = Hnsw.IdBloom.rebuildCount
     val fb0 = Hnsw.IdBloom.fallbackCount
     // three all-new batches: the steady state — the diff must come
@@ -829,12 +829,12 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
       emb.filter(col("vec_id") >= 110 && col("vec_id") < 130)
         .unionAll(emb.filter(col("vec_id") === 125L))) == 10L)
     val served = forgeCorpus(col("vec_id") < 130)
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, served, idx, efSearch = 256))
       == rows(Similarity.annBruteForce(spark, served)))
     // session restart (memo cold): the SIDECAR answers — no rebuild —
     // and idempotence still holds
-    Hnsw.IdBloom.invalidateBloomMemo()
+    Hnsw.IdBloom.memo.clear()
     val rb1 = Hnsw.IdBloom.rebuildCount
     assert(Hnsw.appendHnswIndexSegment(spark, idx,
       emb.filter(col("vec_id") < 130)) == 0L)
@@ -843,7 +843,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an out-of-band id-set change (routed append with no valid bloom
     // present) DROPS the sidecar; the next segment append rebuilds it
     // from one scan and stays idempotent
-    Hnsw.IdBloom.invalidateBloomMemo()
+    Hnsw.IdBloom.memo.clear()
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$idx/_idbloom"))
     val grown = forgeCorpus(col("vec_id") < 135)
@@ -880,7 +880,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevCap = sys.props.get("graft.hnsw.bloomCapacity")
     try {
       sys.props("graft.hnsw.bloomCapacity") = "1234"
-      Hnsw.IdBloom.invalidateBloomMemo() // force the sidecar read path
+      Hnsw.IdBloom.memo.clear() // force the sidecar read path
       val grown3 = forgeCorpus(col("vec_id") < 150)
       assert(Hnsw.appendHnswIndexSegment(spark, idx,
         graft.Tables.embeddings(spark, grown3)
@@ -902,7 +902,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = forgeCorpus(col("vec_id") < 100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-driftleak").toString
     Hnsw.writeHnswIndexSharded(spark, corpus, idx, nShards = 4)
-    Hnsw.invalidateDriftChecks()
+    Hnsw.driftChecked.clear()
     // the designed steady state: maintain batch → serve, repeated —
     // every batch mints a NEW index stamp (and the in-place corpus
     // growth a new corpus stamp), so without the purge each cycle
@@ -916,8 +916,8 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
           .filter(col("vec_id") >= 100 + 10 * i))
       Hnsw.annHnswServeSharded(spark, corpus, idx, efSearch = 256).count()
     }
-    assert(Hnsw.driftCheckedSize == 1,
-      s"stale drift entries must purge, got ${Hnsw.driftCheckedSize}")
+    assert(Hnsw.driftChecked.size == 1,
+      s"stale drift entries must purge, got ${Hnsw.driftChecked.size}")
   }
 
   test("a crash between reshard's delete and rename auto-recovers: the " +
@@ -937,7 +937,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(new java.io.File(s"$idx/.staging-reshard/_SUCCESS").exists())
     }
     forgeCrash()
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, corpus, idx, efSearch = 256))
       == exact, "serve must auto-recover the stranded staging")
     assert(new java.io.File(s"$idx/graph/shard=0").isDirectory &&
@@ -994,7 +994,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$idx/.trash-reshard/shard=0/part-0"),
       Array[Byte](1)) // stale bytes — must be dropped, never read
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, corpus, idx, efSearch = 256))
       == rows(Similarity.annBruteForce(spark, corpus)),
       "recovery must serve from the authoritative staged copy")
@@ -1039,7 +1039,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevCap = sys.props.get("graft.hnsw.bloomCapacity")
     try {
       sys.props("graft.hnsw.bloomCapacity") = "20" // tiny -D floor
-      Hnsw.IdBloom.invalidateBloomMemo()
+      Hnsw.IdBloom.memo.clear()
       Hnsw.ensureShardedMeta(idx, 8, 96, 4)
       // creation at cap=20, then 200 ids folded in → the filter runs
       // far past its design fpp: a fresh 50-id batch gets flagged
@@ -1060,7 +1060,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
       // operator response: force a rebuild (drop the sidecar) — the
       // rebuild scans the ids anyway, so it sizes the new filter from
       // the OBSERVED count (2x slack), not the stale -D floor
-      Hnsw.IdBloom.invalidateBloomMemo()
+      Hnsw.IdBloom.memo.clear()
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(s"$idx/_idbloom"))
       val rb0 = Hnsw.IdBloom.rebuildCount
@@ -1068,7 +1068,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
         emb.filter(col("vec_id") >= 250 && col("vec_id") < 300)) == 50L)
       assert(Hnsw.IdBloom.rebuildCount == rb0 + 1)
       val stamp = graft.sources.ContentStamp.of(spark, s"$idx/graph")
-      val cap = Hnsw.IdBloom.preBloomFor(spark, idx, stamp).map(_._1)
+      val cap = Hnsw.IdBloom.validFor(spark, idx, stamp).map(_._1)
       assert(cap.contains(500L), // max(20, 2 x 250 observed at rebuild)
         s"rebuild must size from the observed id count, got $cap")
       // steady state restored: an all-new batch at 10x+ the -D floor

@@ -404,18 +404,21 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cluster-label memo: hit on second call, bypassed when distributed path forced") {
     import spark.implicits._
     Dedup.invalidateClusterMemo()
-    assert(Dedup.clusterMemoSize === 0)
+    assert(Dedup.clusterMemo.size === 0)
     val first = Dedup.nearDupClusters(spark, sf).as[(Long, Long)].collect().toSet
-    assert(Dedup.clusterMemoSize === 1, "fast path must memoize its labels")
+    assert(Dedup.clusterMemo.size === 1, "fast path must memoize its labels")
+    val hits0 = Dedup.clusterMemo.hits
     val second = Dedup.nearDupClusters(spark, sf).as[(Long, Long)].collect().toSet
     assert(second === first, "memo hit must return identical labels")
-    assert(Dedup.clusterMemoSize === 1)
+    assert(Dedup.clusterMemo.hits === hits0 + 1, "the second call must hit")
+    assert(Dedup.clusterMemo.size === 1)
     // forcing the distributed path bypasses the memo and still agrees
     val forced = Dedup.nearDupClusters(spark, sf, driverMaxEdges = 0)
       .as[(Long, Long)].collect().toSet
     assert(forced === first)
+    assert(Dedup.clusterMemo.hits === hits0 + 1, "the forced path must not read the memo")
     Dedup.invalidateClusterMemo()
-    assert(Dedup.clusterMemoSize === 0)
+    assert(Dedup.clusterMemo.size === 0)
   }
 
   test("search page: pagination stable, ES-style highlight wraps every match") {

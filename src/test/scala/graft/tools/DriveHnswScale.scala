@@ -125,7 +125,7 @@ object DriveHnswScale {
         // batch 0 = the one-time sidecar migration (no _idbloom exists
         // after a fresh build): one distributed level-0 scan, priced
         // separately
-        Hnsw.IdBloom.invalidateBloomMemo()
+        Hnsw.IdBloom.memo.clear()
         val tm = System.nanoTime()
         require(Hnsw.appendHnswIndexSegment(spark, idx, arrivals(0)) == batchSize)
         val migrateS = (System.nanoTime() - tm) / 1e9
@@ -146,7 +146,7 @@ object DriveHnswScale {
         // FORCED: kill sidecar + memo before every batch — each one
         // rebuilds from the full level-0 scan (the pre-bloom shape)
         val forced = (nBatches + 1 to 2 * nBatches).map { i =>
-          Hnsw.IdBloom.invalidateBloomMemo()
+          Hnsw.IdBloom.memo.clear()
           new java.io.File(s"$idx/_idbloom").delete()
           val t0 = System.nanoTime()
           require(Hnsw.appendHnswIndexSegment(spark, idx, arrivals(i)) == batchSize)
@@ -204,7 +204,7 @@ object DriveHnswScale {
           (idx, b) => Hnsw.appendHnswIndexShardedBatch(spark, idx, b))
         // serve drift: fan-out over nSh + nBatches graphs vs the
         // routed nSh, then reshard-compact the segments and re-serve
-        Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+        Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
         Hnsw.annHnswServeSharded(spark, dir, idxSeg).count() // warm
         val segServe = minOf2(Hnsw.annHnswServeSharded(spark, dir, idxSeg,
           nQueries = 100).count())
@@ -246,12 +246,12 @@ object DriveHnswScale {
             nQueries = 100, efSearch = ef))
           f"ef=$ef:recall=${(want & got).size.toDouble / want.size}%5.3f"
         }.mkString(" ")
-        Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+        Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
         val before = curve()
         val tr = System.nanoTime()
         Hnsw.reshardHnswIndexSharded(spark, idx, to)
         val reshS = (System.nanoTime() - tr) / 1e9
-        Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+        Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
         val after = curve()
         // the honest comparator: a fresh distributed build at `to`
         val idx2 = s"$dir/hnsw_fresh"
@@ -282,7 +282,7 @@ object DriveHnswScale {
       // tier (per-shard parquet read + graph reconstruction, one
       // task per shard); RESIDENT = the steady state, shard graphs
       // already in executor memory
-      Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+      Hnsw.ShardGraphCache.invalidate(); Hnsw.driftChecked.clear()
       val tc = System.nanoTime()
       Hnsw.annHnswServeSharded(spark, dir, idx, nQueries = 10).count()
       val coldS = (System.nanoTime() - tc) / 1e9

@@ -26,10 +26,7 @@ object TimeQ {
       val ts = (1 to 2).map { _ =>
         // standalone timings: each pass starts memo-cold (Bench's d8
         // runs memo-warm after d7; here d8 is its full standalone cost)
-        graft.operators.Dedup.invalidateClusterMemo()
-        graft.operators.Similarity.invalidateModelMemo()
-        graft.operators.TextOps.invalidateBpeMemo()
-        graft.operators.Hnsw.invalidateGraphMemo()
+        graft.StampedMemo.clearAll()
         val t0 = System.nanoTime()
         qs(n)(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
