@@ -403,8 +403,8 @@ object Bench {
     }
     // run a streaming query with the state shuffle sized to the batch
     // volume: at these row counts more partitions just multiply
-    // per-partition store-commit overhead (profiled via
-    // tools/ProfileStream). The count is pinned into the checkpoint at
+    // per-partition store-commit overhead (profiled by ProfileStream,
+    // a main last at df0f5b7). The count is pinned into the checkpoint at
     // first batch (planned asynchronously after start()), so only
     // restore the conf once the query has fully stopped.
     def timedStream(partitions: Int)(start: () => org.apache.spark.sql.streaming.StreamingQuery): Double = {
@@ -495,8 +495,8 @@ object Bench {
     // compile + first state-store open, ~1-3 s), so the reported "rate"
     // swung 4× between idle runs with IDENTICAL CPU calibrations
     // (r5's dau-HDFS 29.7k and an r6 repro both trace to this, not to
-    // contention or a store regression — see tools/ProfileStreamIo:
-    // fsync latency flat, warm walls converge once input is ×10).
+    // contention or a store regression — ProfileStreamIo, a main last
+    // at df0f5b7, measured it: fsync latency flat, warm walls converge once input is ×10).
     // Each single-batch section therefore replicates its input with an
     // EXPANDED key space (real state growth, not re-dedup of the same
     // keys) until sustained throughput dominates the fixed cost.
@@ -727,8 +727,8 @@ object Bench {
       }
     }
     // the two streaming INTAKE loops — the library's flagship
-    // deployment shapes (r9 verdict Next #2: measured ad hoc by
-    // TimeDedupServe and the round-9 intake study (SCALE.md), now
+    // deployment shapes (r9 verdict Next #2: measured ad hoc in the
+    // round-9 intake study (SCALE.md's TimeDedupServe record), now
     // round-over-round comparable on the artifact). The documents
     // table is split into 4 files and fed as 4 micro-batches
     // (maxFilesPerTrigger=1): each batch probes the index maintained
@@ -949,7 +949,7 @@ object Bench {
     // throughput exactly the way the intake floor did (the 20 k-doc
     // precedent above). Carry the amortized point: ONE 20 k-vector
     // trigger of clustered hash-jittered synthetic embeddings (the
-    // DriveHnswScale corpus shape — the sf table is too small for an
+    // corpus shape of SCALE.md's DriveHnswScale rungs — the sf table is too small for an
     // amortized feed), fresh index per attempt. Guard: every fed
     // vector indexed exactly once (level-0 count).
     val streamHnswMaintain20kRate: Double = streamSection("stream_hnsw_maintain_20k") {

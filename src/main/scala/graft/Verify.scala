@@ -4,6 +4,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `s` as a quoted JSON string for oracle_sql.json: escapes backslash,
+    * quote and ALL control chars (< 0x20) — a tab or CR in the oracle
+    * SQL would otherwise make the reader's json.load fail and zero the
+    * whole correctness dump. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local("graft-verify")
@@ -18,18 +32,6 @@ object Verify {
       // Bench: bounded memory regardless of query count)
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // d3's oracle (exact all-pairs sweep) is only valid when 16×4-band
     // LSH recall is 1 on THIS corpus — true for the pinned seed-42 data
     // (every qualifying pair at J ≥ 0.89) but not guaranteed for a
@@ -153,7 +155,7 @@ object Verify {
       }) Nil else Seq("v13_knn_graph"))
     val oracles = SparkEntry.oracleSql -- demoted
     val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -112,7 +112,8 @@ object Dedup {
     // definition) feeds the prefix index AND both verify joins — three
     // evaluations of tokenize+shingle+sort otherwise. Long arrays
     // (~100 × 8 B/doc) cache columnar-cheap, unlike the string-shingle
-    // arrays that made caching a loss upstream (ProfileDedup).
+    // arrays that made caching a loss upstream (measured by ProfileDedup,
+    // a main last at df0f5b7).
     val (out, scratch) = ngramJaccardScratch(spark, dir, minJ)
     scratch.foreach(ScratchCache.arm)
     out
@@ -139,7 +140,8 @@ object Dedup {
     // doc): it sits on both sides of the candidate self-join, which
     // would otherwise run the shingle+sort projection twice. Array-free
     // rows cache cheaply — unlike the per-doc shingle arrays, whose
-    // columnar-cache cost exceeded their recompute cost (ProfileDedup).
+    // columnar-cache cost exceeded their recompute cost (ProfileDedup,
+    // a main last at df0f5b7).
     val pinv = docs
       .select(col("doc_id"), col("n_sh"),
         explode(slice(col("sh_hashes"), lit(1), prefixLen)).as("sh"))

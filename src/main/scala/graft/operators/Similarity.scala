@@ -1164,7 +1164,7 @@ object Similarity {
     // persist ONLY the scalar (vec_id, tbl, bucket) index — persisting
     // the exploded relation with its embedding arrays would cache
     // `tables`× the corpus's array data (the array-heavy-persist trap
-    // ProfileDedup measured); embeddings re-attach to the candidate ids
+    // ProfileDedup, a main last at df0f5b7, measured); embeddings re-attach to the candidate ids
     // through two small joins after the scalar self-join + dedup.
     // (A/B'd: replacing the distinct() with a first-colliding-table
     // filter against broadcast signature arrays was ~3× SLOWER — the

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * distinct ~40-token docs with ~2% near-dup pairs, all pure column
   * arithmetic (no data files, no RNG): the same corpus shape at any
   * size, so ladder rungs and bench lines are comparable across rounds.
-  * Used by the dedup scale tool (DriveDedupScale) and by
-  * [[graft.Bench]]'s amortized intake lines —
+  * Used by [[graft.Bench]]'s amortized intake lines and, until
+  * df0f5b7, by the dedup scale ladder (SCALE.md's DriveDedupScale
+  * rungs) —
   * replicating the 5 000 testdata docs instead would drown the dup
   * path with exact copies. */
 object SyntheticDocs {

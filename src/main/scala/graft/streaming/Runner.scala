@@ -207,34 +207,6 @@ object Runner {
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .start()
 
-  /** ODS router on file edges for a MIXED Maxwell/Canal feed: raw
-    * JSON lines → [[routeMixed]] → parquet partitioned by topic. */
-  def mixedRouterQuery(spark: SparkSession, inDir: String, outDir: String,
-                       checkpoint: String): StreamingQuery =
-    routeMixed(spark.readStream.text(inDir))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .partitionBy("topic")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("5 seconds"))
-      .start()
-
-  /** Online ANN serving: a STREAM of (query_id, q_emb) answered per
-    * micro-batch against the at-rest IVF×PQ index
-    * (`Similarity.writeAnnIndex` output) — the online half of the
-    * FAISS train-offline/search-online deployment split, on Spark's
-    * own micro-batch runtime. Each batch routes its queries to their
-    * probed cells, and THAT BATCH's cell set becomes the static
-    * partition filter on the index read (the annIvfPqServe pruning,
-    * re-derived per batch), so a trigger touches only the index files
-    * its queries probe. Answers land as parquet partitioned by
-    * `batch_id` with dynamic partition OVERWRITE — a replayed batch
-    * rewrites its own partition instead of duplicating it (the K5
-    * idempotent-sink recipe, partition-keyed). Model training is
-    * memoized across batches (the serving session trains once — in
-    * production the model ships with the index). */
   /** Streaming ANN INDEX MAINTENANCE — the write half of the index
     * lifecycle under continuous intake: a stream of (vec_id,
     * embedding) rows is encoded per micro-batch with the PINNED
@@ -281,10 +253,7 @@ object Runner {
                             m: Int = 4, nCodes: Int = 16,
                             family: String = "pq",
                             compactEveryBatches: Int = 64): StreamingQuery = {
-    require(compactEveryBatches == 0 || compactEveryBatches >= 3,
-      s"compactEveryBatches ($compactEveryBatches) must be 0 (off) or >= 3: " +
-        "the fold leaves base + current = 2 partitions, so a threshold of " +
-        "2 would rewrite the whole index on every batch")
+    requireFoldThreshold(compactEveryBatches, s"ANN index $indexPath")
     vectorStream
       .writeStream
       .outputMode("append")
@@ -313,6 +282,16 @@ object Runner {
       .start()
   }
 
+  /** Refuse a fold threshold of 1 or 2 before the query starts: the
+    * fold leaves base + current = 2 partitions, so such a threshold
+    * would rewrite the whole `store` on every batch. 0 turns the fold
+    * off. */
+  private def requireFoldThreshold(compactEveryBatches: Int, store: String): Unit =
+    require(compactEveryBatches == 0 || compactEveryBatches >= 3,
+      s"compactEveryBatches ($compactEveryBatches) must be 0 (off) or >= 3: " +
+        "the fold leaves base + current = 2 partitions, so a threshold of " +
+        s"2 would rewrite the whole $store on every batch")
+
   /** Shared body of every at-rest MAINTAIN loop — pageRank edges,
     * component edges, CMS counters ran three near-identical
     * foreachBatch copies before this (drift risk once the third copy
@@ -339,10 +318,7 @@ object Runner {
                            prepare: SparkSession => Unit = _ => (),
                            afterWrite: (SparkSession, Long) => Unit = (_, _) => ())
       : StreamingQuery = {
-    require(compactEveryBatches == 0 || compactEveryBatches >= 3,
-      s"compactEveryBatches ($compactEveryBatches) must be 0 (off) or >= 3: " +
-        "the fold leaves base + current = 2 partitions, so a threshold of " +
-        "2 would rewrite the whole store on every batch")
+    requireFoldThreshold(compactEveryBatches, s"store $storeDir")
     rows
       .writeStream
       .outputMode("append")
@@ -699,32 +675,6 @@ object Runner {
       .start()
   }
 
-  /** Streaming dedup-at-intake SERVING — probe each micro-batch of
-    * (doc_id, text) documents against a STATIC at-rest LSH index
-    * ([[graft.operators.Dedup.writeDedupIndex]]): per batch, every
-    * (query_id, match_id, jaccard) near-dup hit against the indexed
-    * corpus lands partitioned by `batch_id` under write-scoped dynamic
-    * partition overwrite (the K5 idempotent sink — a replayed batch
-    * rewrites its own partition). Stateless per batch: all state is
-    * the at-rest index. */
-  def dedupServeQuery(spark: SparkSession, indexPath: String,
-                      docStream: DataFrame, outDir: String,
-                      checkpoint: String,
-                      minJ: Double = graft.operators.Dedup.lshMinJ): StreamingQuery =
-    docStream
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup
-          .dedupServeBatch(spark, indexPath, batch, minJ)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-      }
-      .start()
-
   /** The FULL streaming intake-dedup loop on a STREAM-MAINTAINED
     * index: per micro-batch, (1) probe the arriving documents against
     * everything accepted so far (the [[graft.operators.Dedup
@@ -889,10 +839,7 @@ object Runner {
       judge: DataFrame => DataFrame,
       decide: DataFrame => DataFrame): StreamingQuery = {
     import graft.operators.Dedup
-    require(compactEveryBatches == 0 || compactEveryBatches >= 3,
-      s"compactEveryBatches ($compactEveryBatches) must be 0 (off) or >= 3: " +
-        "the fold leaves base + current = 2 partitions, so a threshold of " +
-        "2 would rewrite the whole index on every batch")
+    requireFoldThreshold(compactEveryBatches, s"dedup index $indexPath")
     docStream
       .writeStream
       .outputMode("append")
@@ -940,6 +887,20 @@ object Runner {
       .start()
   }
 
+  /** Online ANN serving: a STREAM of (query_id, q_emb) answered per
+    * micro-batch against the at-rest IVF×PQ index
+    * (`Similarity.writeAnnIndex` output) — the online half of the
+    * FAISS train-offline/search-online deployment split, on Spark's
+    * own micro-batch runtime. Each batch routes its queries to their
+    * probed cells, and THAT BATCH's cell set becomes the static
+    * partition filter on the index read (the annIvfPqServe pruning,
+    * re-derived per batch), so a trigger touches only the index files
+    * its queries probe. Answers land as parquet partitioned by
+    * `batch_id` with dynamic partition OVERWRITE — a replayed batch
+    * rewrites its own partition instead of duplicating it (the K5
+    * idempotent-sink recipe, partition-keyed). Model training is
+    * memoized across batches (the serving session trains once — in
+    * production the model ships with the index). */
   def annServeQuery(spark: SparkSession, dir: String, indexPath: String,
                     queryStream: DataFrame, outDir: String, checkpoint: String,
                     k: Int = 5, nprobe: Int = 4, rerank: Int = 64): StreamingQuery =

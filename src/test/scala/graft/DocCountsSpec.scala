@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * judge cross-checks first. The source of truth is `SparkEntry`
   * itself (`queries` = the gate surface, `oracleSql` = the oracled
   * subset); any doc quoting different totals fails here the moment the
-  * surface changes. */
+  * surface changes. The tool mains the recipes name are checked the
+  * same way: each must resolve on the test classpath. */
 class DocCountsSpec extends AnyFunSuite {
   private val total = SparkEntry.queries.size
   private val oracled = SparkEntry.oracleSql.size
@@ -38,5 +39,19 @@ class DocCountsSpec extends AnyFunSuite {
     assert(s.contains(s"**$total queries** in `SparkEntry`") &&
         s.contains(s"**$oracled DuckDB-oracled**"),
       s"SURVEY.md §8 does not say $total queries / $oracled oracled — update it")
+  }
+
+  test("every tool main that SKILL.md or README.md names exists") {
+    // `graft.tools.<Name>` or `tools/<Name>` with a capitalised name:
+    // `tools/check_oracle.py` is a script, not a main
+    val mainRef = """(?:graft\.tools\.|tools/)([A-Z]\w*)""".r
+    val named = for {
+      doc <- Seq(".claude/skills/verify/SKILL.md", "README.md")
+      main <- mainRef.findAllMatchIn(normalized(doc)).map(_.group(1)).toSeq.distinct
+    } yield (doc, main)
+    assert(named.nonEmpty)
+    val missing = named.collect { case (doc, main) if scala.util.Try(Class.forName(
+        s"graft.tools.$main$$", false, getClass.getClassLoader)).isFailure => s"$main ($doc)" }
+    assert(missing.isEmpty, s"recipes name mains that do not exist: ${missing.mkString(", ")}")
   }
 }

@@ -328,7 +328,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("clustered-corpus recall: the Alg.-4 heuristic keeps the " +
       "long-range links simple selection starves") {
-    // the DriveHnswScale finding as a regression gate: on a CLUSTERED
+    // SCALE.md's DriveHnswScale finding as a regression gate: on a CLUSTERED
     // corpus, plain top-M neighbor selection fills every adjacency
     // list with same-cluster members and recall PLATEAUS (~0.58 at
     // ANY ef, measured at 1e5); heuristic selection keeps one edge

@@ -1,7 +1,11 @@
 package graft.operators
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, ScratchCache, SparkEntry}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -14,6 +18,12 @@ import org.scalatest.BeforeAndAfterAll
   * mystery 50× bench regression at sf0.1 — the judge-facing promise
   * "no cartesian products outside the documented baselines" as a spec
   * rather than prose.
+  *
+  * The same plans feed the EXCHANGE LEDGER
+  * (`src/test/resources/exchange_ledger.txt`): each query's committed
+  * shuffle and broadcast Exchange counts. Exchange counts are
+  * deterministic where wall times are not, so a change that adds a
+  * shuffle or turns a broadcast into one fails here at plan time.
   */
 class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -27,7 +37,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = {
     // plan-only construction arms operator scratch that no action will
     // ever sweep — release it so later suites start clean
-    graft.ScratchCache.drain()
+    ScratchCache.drain()
     spark.stop()
   }
 
@@ -78,39 +88,78 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the in-plan replacement for the eager builder-side count
     "d13_source_overlap" -> 1)
 
-  /** Count loop joins by TREE TRAVERSAL, not string search: the plan
-    * printer re-prints every cached relation's subplan at each scan
-    * site, so a composition that persists a scalar-broadcast-bearing
-    * relation (q34 persists the curated set containing t29's stats
-    * row) would string-count the same licensed BNLJ many times.
-    * Traverse nodes instead, descending into each distinct
-    * InMemoryRelation's cached plan exactly ONCE — every physical loop
-    * join is still seen (including inside cached subtrees), but no
-    * join is double-counted through cache re-prints. */
-  private def loopJoins(root: org.apache.spark.sql.execution.SparkPlan): (Int, Int) = {
+  /** Every gate query's plan, built ONCE from a clean cache and shared
+    * by the audits below. A plan-only build arms persists that no action
+    * ever sweeps, and one left cached changes a later query's plan
+    * (t17 plans 2 shuffles over another query's stale persist, 1 clean).
+    * Building `executedPlan` runs the preparation rules — the Exchanges
+    * appear there — but not the query: AQE has re-optimized nothing
+    * yet. (Builders that need a driver-side model run small jobs:
+    * an embedding's dimension, the decontamination eval-gram set,
+    * v18's graph build + walk that GENERATES its shortlist relation.) */
+  private lazy val plans: Seq[(String, QueryExecution)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      spark.catalog.clearCache()
+      ScratchCache.drain()
+      val qe = fn(spark, sf).queryExecution
+      qe.executedPlan
+      name -> qe
+    }
+
+  private def planOf(name: String): QueryExecution =
+    plans.collectFirst { case (`name`, qe) => qe }.get
+
+  /** Every physical node under `root`, by TREE TRAVERSAL, not string
+    * search: the plan printer re-prints every cached relation's subplan
+    * at each scan site, so a composition that persists a
+    * scalar-broadcast-bearing relation (q34 persists the curated set
+    * containing t29's stats row) would string-count the same licensed
+    * BNLJ many times. Descend into AQE's current plan (an
+    * `AdaptiveSparkPlanExec` is a leaf), into subqueries, and into each
+    * cached plan exactly ONCE, keyed by its builder (an
+    * InMemoryRelation's `withOutput` copies share one) — every physical
+    * operator is still seen, including inside cached subtrees, but
+    * none is double-counted through cache re-prints. */
+  private def nodesOf(root: SparkPlan): Seq[SparkPlan] = {
     val seen = scala.collection.mutable.Set.empty[AnyRef]
-    var bnlj = 0
-    var cart = 0
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = p.foreach {
-      case t: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        if (seen.add(t.relation)) walk(t.relation.cachedPlan)
-      case n =>
-        if (n.nodeName.contains("BroadcastNestedLoopJoin")) bnlj += 1
-        if (n.nodeName.contains("CartesianProduct")) cart += 1
+    val out = Seq.newBuilder[SparkPlan]
+    def walk(p: SparkPlan): Unit = p.foreachWithSubqueries {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case t: InMemoryTableScanExec =>
+        if (seen.add(t.relation.cacheBuilder)) walk(t.relation.cachedPlan)
+      case n => out += n
     }
     walk(root)
-    (bnlj, cart)
+    out.result()
   }
 
+  private def loopJoins(root: SparkPlan): (Int, Int) = {
+    val names = nodesOf(root).map(_.nodeName)
+    (names.count(_.contains("BroadcastNestedLoopJoin")),
+      names.count(_.contains("CartesianProduct")))
+  }
+
+  /** (shuffle, broadcast) Exchange counts of a prepared plan. */
+  private def exchanges(root: SparkPlan): (Int, Int) = {
+    val ns = nodesOf(root)
+    (ns.count(_.isInstanceOf[ShuffleExchangeExec]),
+      ns.count(_.isInstanceOf[BroadcastExchangeExec]))
+  }
+
+  /** The committed ledger: `name shuffles broadcasts` per line. */
+  private lazy val ledger: Map[String, (Int, Int)] =
+    scala.io.Source.fromResource("exchange_ledger.txt").getLines()
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+      .map { l =>
+        val Array(name, sh, bc) = l.split("\\s+")
+        name -> (sh.toInt, bc.toInt)
+      }.toMap
+
   test("no undocumented nested-loop or cartesian join in any gate query") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        // sparkPlan (pre-AQE) shows the static join strategy; building it
-        // does not run the query (documented exception: v18's builder
-        // runs the driver-held graph build + walk that GENERATES its
-        // shortlist relation — see operators.Hnsw), so the surface
-        // audits in seconds
-        val (bnlj, cart) = loopJoins(fn(spark, sf).queryExecution.sparkPlan)
+    val offenders = plans.flatMap {
+      case (name, qe) =>
+        // sparkPlan shows the static join strategy
+        val (bnlj, cart) = loopJoins(qe.sparkPlan)
         val ok =
           if (allPairsBaselines(name)) true
           // scalar-broadcast queries are licensed for EXACTLY the one
@@ -125,6 +174,22 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"queries planning nested-loop/cartesian joins: ${offenders.mkString(", ")}")
   }
 
+  test("exchange ledger: every gate query plans its committed " +
+      "shuffle and broadcast Exchange counts") {
+    val actual = plans.map { case (name, qe) => name -> exchanges(qe.executedPlan) }.toMap
+    assert(ledger.keySet === actual.keySet,
+      s"ledger entries without a query: ${(ledger.keySet -- actual.keySet).toSeq.sorted}; " +
+        s"queries without a ledger entry: ${(actual.keySet -- ledger.keySet).toSeq.sorted}")
+    val differing = plans.filter { case (name, _) => ledger(name) != actual(name) }
+    if (differing.nonEmpty)
+      fail(differing.map { case (name, qe) =>
+        val ((es, eb), (as, ab)) = (ledger(name), actual(name))
+        s"$name: expected $es shuffle / $eb broadcast, planned $as / $ab\n" +
+          qe.explainString(FormattedMode)
+      }.mkString(s"${differing.size} queries differ from the exchange ledger " +
+        "(src/test/resources/exchange_ledger.txt):\n", "\n", ""))
+  }
+
   test("bm25 never shuffles the corpus: no exchange keyed on (doc, token)") {
     // the round-8 rework's invariant: doc length and query-term tf are
     // NARROW per-row computations, so the only exchanges left are the
@@ -133,8 +198,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an inverted-index groupBy(doc_id, tok) over every exploded token,
     // i.e. a corpus-sized shuffle — plans an exchange keyed on BOTH
     // columns; none of the legitimate exchanges do.
-    val plan = SparkEntry.queries("t23_bm25")(spark, sf)
-      .queryExecution.sparkPlan.toString
+    val plan = planOf("t23_bm25").sparkPlan.toString
     val pairKeyed = "hashpartitioning\\((doc_id#\\d+, tok#\\d+|tok#\\d+, doc_id#\\d+)".r
     assert(pairKeyed.findFirstIn(plan).isEmpty,
       "bm25 plans a (doc_id, tok)-keyed exchange again — the corpus-sized " +
@@ -153,8 +217,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // candidates) are the same cliff at mining fan-outs
     for (name <- Seq("t23_bm25", "t26_hybrid_rrf", "q33_sampled_percentiles",
         "v12_bitext_margin_ann")) {
-      val plan = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.sparkPlan.toString
+      val plan = planOf(name).sparkPlan.toString
       assert(plan.contains("WindowGroupLimit") ||
           plan.contains("TakeOrderedAndProject"),
         s"$name lost its rank-limit pushdown (no WindowGroupLimit/" +

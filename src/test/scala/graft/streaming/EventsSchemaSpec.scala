@@ -41,7 +41,8 @@ class EventsSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dauFirstVisits streams the real events.parquet schema through its watermark") {
     // file-stream source with the EXACT on-disk schema (readStream needs
     // an explicit schema; take it from a batch read so nothing is
-    // hand-maintained) — this is the path Bench/DriveDauRaw run
+    // hand-maintained) — this is the path Bench's DAU lines run (and
+    // DriveDauRaw, a main last at df0f5b7)
     val onDisk = spark.read.parquet(s"$sf/events.parquet")
     // file-stream sources want a directory; symlink the corpus file into
     // one (the Bench streamOf pattern)

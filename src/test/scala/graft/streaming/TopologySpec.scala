@@ -96,6 +96,41 @@ class TopologySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dimLoads === inputs(chain.agg).count(_ > 0))
   }
 
+  test("agg joins the sku dim as it stands at each micro-batch") {
+    // the reference's per-batch dim refresh (S5/J2): a brand rewritten
+    // between two slices lands in the next agg batch. Each order's
+    // lines share one create_time, so cutting by it keeps orders whole
+    // and puts the second slice ahead of wide's watermark
+    val root = java.nio.file.Files.createTempDirectory("graft-topodim").toString
+    Topology.writeCdcFixture(spark, sf, s"$root/fixture")
+    val lines = spark.read.text(s"$root/fixture")
+    val late = get_json_object(col("value"), "$.data.create_time") >= "2023-11-14 22:26:00"
+    lines.filter(!late).write.text(s"$root/cdc")
+    val dimDir = s"$root/dim"
+    val dim = Tables.part(spark, sf).select(col("p_partkey"), col("p_brand"))
+    dim.write.parquet(dimDir)
+    val chain = Topology.start(spark, s"$root/cdc",
+      s"$root/routed", s"$root/wide", s"$root/agg", s"$root/ckpt",
+      () => spark.read.parquet(dimDir))
+    try {
+      chain.drain()
+      val lastBefore = spark.read.parquet(s"$root/agg")
+        .agg(max(col("batch_id")).cast("long")).head.getLong(0)
+      val sku = lines.filter(late)
+        .select(get_json_object(col("value"), "$.data.sku_id").cast("long").as("sku"))
+        .filter(col("sku").isNotNull).head.getLong(0)
+      dim.withColumn("p_brand", when(col("p_partkey") === sku, lit("Brand#Refreshed"))
+          .otherwise(col("p_brand")))
+        .write.mode("overwrite").parquet(dimDir)
+      lines.filter(late).write.mode("append").text(s"$root/cdc")
+      chain.drain()
+      val landed = spark.read.parquet(s"$root/agg")
+        .filter(col("tm_name") === "Brand#Refreshed")
+        .select(col("batch_id").cast("long")).collect().map(_.getLong(0)).toSeq
+      assert(landed.nonEmpty && landed.forall(_ > lastBefore), landed)
+    } finally chain.stopAll()
+  }
+
   // ---- breach attribution (Topology.classifyOverBudget) — the r17
   // ledgers' measured breach shapes plus the regression shape,
   // replayed synthetically so the classifier's semantics are pinned.

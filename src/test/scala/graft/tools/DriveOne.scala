@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry, Verify}
 
 /** Dev-side single-query gate check: run ONE SparkEntry query at a
   * given sf dir, dump its parquet + oracle_sql.json for
@@ -19,16 +19,9 @@ object DriveOne {
     println(f"[drive-one] $name ran in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val sql = SparkEntry.oracleSql.get(name)
     sql.foreach { s =>
-      def q(x: String): String = "\"" + x.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$outDir/oracle_sql.json"),
-        s"{${q(name)}: ${q(s)}}".getBytes("UTF-8"))
+        s"{${Verify.jsonString(name)}: ${Verify.jsonString(s)}}".getBytes("UTF-8"))
     }
     if (sql.isEmpty) println(s"[drive-one] $name has no oracle (rows-only)")
     spark.stop()

@@ -11,9 +11,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `sbt "Test/runMain graft.tools.DriveTopology [sfDir] [triggerSec]"`.
   *
   * Default mode (no `triggerSec`): ASAP triggers, fixture fed in two
-  * chunks — one before the topology starts, one while all three
-  * queries are running — so the mid-flight chunk exercises genuine
-  * multi-stage concurrent propagation, not a pre-staged batch.
+  * event-time slices — one before the topology starts, one while all
+  * three queries are running — so the mid-flight slice exercises
+  * genuine multi-stage concurrent propagation, not a pre-staged batch.
   *
   * Paced mode (`triggerSec` > 0): BASELINE.md's derived latency
   * target made measurable — the reference runs every app on a
@@ -49,55 +49,36 @@ object DriveTopology {
         java.nio.file.Paths.get(cdcDir, f.getName))
     }
 
-    val trigger = if (triggerSec > 0) Some(s"$triggerSec seconds") else None
-    val chain =
-      if (triggerSec == 0) {
-        // two-chunk feed: move half the fixture files in before start
-        val files = sliceFiles(fixDir)
-        require(files.length >= 2, s"fixture produced ${files.length} files; " +
-          "need >= 2 for the two-chunk feed")
-        val (first, second) = files.splitAt(files.length / 2)
-        feed(first)
-        val c = Topology.start(spark, cdcDir,
-          s"$root/routed", s"$root/wide", s"$root/agg", s"$root/ckpt",
-          () => Tables.part(spark, sfDir).select(col("p_partkey"), col("p_brand")))
-        println("[topology] chunk 1 propagated; feeding chunk 2 mid-flight")
-        feed(second)
-        c
-      } else {
-        // paced: re-slice the fixture TIME-MONOTONICALLY so one slice
-        // arrives per interval — the ordered-Kafka arrival shape. A
-        // shuffle-order slicing would scramble event time across
-        // batches and the watermark would (correctly) drop the
-        // stragglers; in-order arrival means the 20 s skew window only
-        // has to absorb intra-batch disorder, which is the deployment
-        // assumption the reference's 20 s sliding window makes too.
-        val sliceDir = s"$root/slices"
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"))
-        spark.read.text(fixDir)
-          .withColumn("ts", get_json_object(col("value"), "$.data.create_time"))
-          .withColumn("slice",
-            (((row_number().over(w) - 1) * nSlices) / n).cast("int"))
-          .select("value", "slice")
-          .write.partitionBy("slice").text(sliceDir)
-        // slice dirs reuse one task's part-file name — uniquify on move
-        val slices = (0 until nSlices).toArray.flatMap(i =>
-          sliceFiles(s"$sliceDir/slice=$i").map { f =>
-            val named = new java.io.File(f.getParent, s"s$i-${f.getName}")
-            java.nio.file.Files.move(f.toPath, named.toPath); named
-          })
-        println(s"[topology] paced: ${slices.length} slice files, one per " +
-          s"$triggerSec s (~${n / slices.length} lines each)")
-        feed(slices.take(1))
-        val c = Topology.start(spark, cdcDir,
-          s"$root/routed", s"$root/wide", s"$root/agg", s"$root/ckpt",
-          () => Tables.part(spark, sfDir).select(col("p_partkey"), col("p_brand")),
-          triggerInterval = trigger)
-        slices.drop(1).foreach { f =>
-          Thread.sleep(triggerSec * 1000L); feed(Array(f))
-        }
-        c
-      }
+    // slice the fixture TIME-MONOTONICALLY — the ordered-Kafka arrival
+    // shape. A file-order split would scramble event time across
+    // batches and the watermark would (correctly) drop the stragglers;
+    // in-order arrival means the 20 s skew window only has to absorb
+    // intra-batch disorder, which is the deployment assumption the
+    // reference's 20 s sliding window makes too. Default mode feeds 2
+    // slices (one before start, one mid-flight), paced mode one slice
+    // per interval.
+    val k = if (triggerSec > 0) nSlices else 2
+    val sliceDir = s"$root/slices"
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"))
+    spark.read.text(fixDir)
+      .withColumn("ts", get_json_object(col("value"), "$.data.create_time"))
+      .withColumn("slice", (((row_number().over(w) - 1) * k) / n).cast("int"))
+      .select("value", "slice")
+      .write.partitionBy("slice").text(sliceDir)
+    // slice dirs reuse one task's part-file name — uniquify on move
+    val slices = (0 until k).map(i =>
+      sliceFiles(s"$sliceDir/slice=$i").map { f =>
+        val named = new java.io.File(f.getParent, s"s$i-${f.getName}")
+        java.nio.file.Files.move(f.toPath, named.toPath); named
+      })
+    println(s"[topology] ${slices.length} time slices (~${n / k} lines each)" +
+      (if (triggerSec > 0) s", one per $triggerSec s" else ""))
+    feed(slices.head)
+    val chain = Topology.start(spark, cdcDir,
+      s"$root/routed", s"$root/wide", s"$root/agg", s"$root/ckpt",
+      () => Tables.part(spark, sfDir).select(col("p_partkey"), col("p_brand")),
+      triggerInterval = if (triggerSec > 0) Some(s"$triggerSec seconds") else None)
+    slices.tail.foreach { s => Thread.sleep(triggerSec * 1000L); feed(s) }
     chain.drain()
     if (triggerSec > 0) {
       // settle one more cycle so the tail batches' progress is recorded
